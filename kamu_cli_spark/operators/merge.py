@@ -144,9 +144,22 @@ def project_temporal_versions(
     )
 
 
-def _is_distinct_from(a: Column, b: Column) -> Column:
-    """SQL `a IS DISTINCT FROM b` (null-safe inequality)."""
-    return ~a.eqNullSafe(b)
+def _changed_sql(cmp_cols: list[str], event_time_col: str) -> list[str]:
+    """Per compare column, the SQL `__o_c IS DISTINCT FROM __n_c` over
+    the diff's prefixed join sides. A null ``event_time`` on the new
+    side alone does not make a row "changed" (snapshot.rs:95-142):
+    snapshots typically arrive without event times and get stamped
+    later."""
+    q = sql_ident
+    return [
+        (
+            f"({q('__n_' + c)} IS NOT NULL AND NOT "
+            f"({q('__o_' + c)} <=> {q('__n_' + c)}))"
+            if c == event_time_col
+            else f"(NOT ({q('__o_' + c)} <=> {q('__n_' + c)}))"
+        )
+        for c in cmp_cols
+    ]
 
 
 class MergeStrategy:
@@ -205,32 +218,6 @@ class MergeStrategyLedger(MergeStrategy):
 
     def sort_order(self) -> list[Column]:
         return [F.col(self.vocab.event_time_column).asc_nulls_first()]
-
-
-def _cdc_change_filter(
-    old_prefix: str,
-    new_prefix: str,
-    compare_cols: list[str],
-    event_time_col: str,
-) -> Column:
-    """OR of `old.c IS DISTINCT FROM new.c` over compare columns.
-
-    A null ``event_time`` on the new side alone does not make a row
-    "changed" (snapshot.rs:95-142): snapshots typically arrive without
-    event times and get stamped later.
-    """
-    parts = []
-    for c in compare_cols:
-        distinct = _is_distinct_from(F.col(old_prefix + c), F.col(new_prefix + c))
-        if c == event_time_col:
-            distinct = F.col(new_prefix + c).isNotNull() & distinct
-        parts.append(distinct)
-    if not parts:
-        return F.lit(False)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out | p
-    return out
 
 
 class MergeStrategySnapshot(MergeStrategy):
@@ -316,20 +303,7 @@ class MergeStrategySnapshot(MergeStrategy):
                 f"{q('__o_' + c)} <=> {q('__n_' + c)}" for c in self.primary_key
             )
         )
-        # OR of `old.c IS DISTINCT FROM new.c` over compare columns; a
-        # null event_time on the new side alone does not make a row
-        # "changed" (snapshot.rs:95-142): snapshots typically arrive
-        # without event times and get stamped later.
-        et = self.vocab.event_time_column
-        changed_parts = [
-            (
-                f"({q('__n_' + c)} IS NOT NULL AND NOT "
-                f"({q('__o_' + c)} <=> {q('__n_' + c)}))"
-                if c == et
-                else f"(NOT ({q('__o_' + c)} <=> {q('__n_' + c)}))"
-            )
-            for c in cmp_cols
-        ]
+        changed_parts = _changed_sql(cmp_cols, self.vocab.event_time_column)
         # One-sided rows are appends/retractions BY PRESENCE — they
         # must survive regardless of the compare columns. The old
         # filter relied on `NOT (null <=> value)` from the absent side
@@ -517,16 +491,7 @@ class MergeStrategyUpsertStream(MergeStrategy):
 
         old_present = "`__o_present` IS NOT NULL"
         is_retract = f"{q('__n_' + op)} = {int(Op.RETRACT)}"
-        et = self.vocab.event_time_column
-        changed_parts = [
-            (
-                f"({q('__n_' + c)} IS NOT NULL AND NOT "
-                f"({q('__o_' + c)} <=> {q('__n_' + c)}))"
-                if c == et
-                else f"(NOT ({q('__o_' + c)} <=> {q('__n_' + c)}))"
-            )
-            for c in cmp_cols
-        ]
+        changed_parts = _changed_sql(cmp_cols, self.vocab.event_time_column)
         changed = " OR ".join(changed_parts) if changed_parts else "false"
         joined = joined.filter(
             f"(({is_retract}) AND {old_present})"

@@ -20,9 +20,23 @@ remaining columns as implicit tie-breakers when requested.
 
 from __future__ import annotations
 
+from datetime import datetime
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+
+class AssignedOffsets(NamedTuple):
+    df: DataFrame
+    # the persisted sorted frame `df` reads; the caller unpersists it
+    # once every consumer of `df` has run
+    pinned: DataFrame
+    # row count per physical partition; offsets start at start_offset
+    # and are dense, so sum(counts) rows span start_offset..+n-1
+    counts: dict[int, int]
+    max_event_time: datetime | None
 
 
 def assign_offsets(
@@ -31,13 +45,15 @@ def assign_offsets(
     start_offset: int = 0,
     offset_column: str = "offset",
     num_partitions: int | None = None,
-) -> DataFrame:
+    event_time_column: str = "event_time",
+) -> AssignedOffsets:
     """Add a dense BIGINT ``offset`` column following `sort_order`.
 
-    Returns a DataFrame sorted by offset across partitions (partition i
-    holds offsets strictly below partition i+1). The result is persisted
-    MEMORY_AND_DISK while consumed; callers that materialize it should
-    ``unpersist`` via the returned df's ``.unpersist()`` when done.
+    The returned ``df`` is sorted by offset across partitions (partition
+    i holds offsets strictly below partition i+1). It reads ``pinned``,
+    which is persisted MEMORY_AND_DISK; the caller must
+    ``pinned.unpersist()`` when done with ``df``. The one count job also
+    yields ``max(event_time_column)``.
     """
     if num_partitions is None:
         num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 1)
@@ -48,7 +64,11 @@ def assign_offsets(
     with_pid = sorted_df.withColumn("__pid", F.spark_partition_id()).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    counts = {r["__pid"]: r["cnt"] for r in with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    rows = with_pid.groupBy("__pid").agg(
+        F.count(F.lit(1)).alias("cnt"), F.max(event_time_column).alias("max_et")
+    ).collect()
+    counts = {r["__pid"]: r["cnt"] for r in rows}
+    ets = [r["max_et"] for r in rows if r["max_et"] is not None]
     base = start_offset
     bases: dict[int, int] = {}
     for pid in sorted(counts):
@@ -68,7 +88,4 @@ def assign_offsets(
         )
         .drop("__pid")
     )
-    # expose the persisted intermediate so callers can release it after
-    # materializing the result
-    out._kamu_persisted = with_pid  # type: ignore[attr-defined]
-    return out
+    return AssignedOffsets(out, with_pid, counts, max(ets, default=None))

@@ -164,11 +164,34 @@ class TransformExecutor:
                 any_new = True
         return plan if any_new else None
 
-    def _commit_changelog(self, spark, events, plan, system_time):
-        """Commit pre-diffed changelog events, recording consumed
-        intervals even when the diff is empty (so nothing reprocesses)."""
-        writer = DataWriter(self.dataset, _PassthroughOps(self.dataset.vocab))
-        in_wm = plan.get("input_watermark", self.input_watermark())
+    def _run_queries(self, spark: SparkSession, drop_op: bool) -> DataFrame:
+        """Run the declared steps over the registered input views (each
+        aliased step becomes a view) and return the unaliased output
+        without the offset/system_time columns inputs carried through —
+        and without `op` when `drop_op`, for executors that derive their
+        own changelog."""
+        result: DataFrame | None = None
+        for step in self.queries:
+            df = spark.sql(step["query"])
+            if step.get("alias"):
+                df.createOrReplaceTempView(step["alias"])
+            else:
+                result = df
+        if result is None:
+            raise TransformError("transform has no unaliased output step")
+        v = self.dataset.vocab
+        system = [v.offset_column, v.system_time_column]
+        if drop_op:
+            system.append(v.operation_type_column)
+        drop = [c for c in system if c in result.columns]
+        return result.drop(*drop) if drop else result
+
+    def _commit_changelog(self, spark, events, plan, system_time, strategy):
+        """Commit `events` through `strategy`, recording consumed
+        intervals even when nothing is written (so nothing reprocesses;
+        the reference commits ExecuteTransform with empty new_data)."""
+        writer = DataWriter(self.dataset, strategy)
+        in_wm = plan["input_watermark"]
         event = writer.write(
             spark,
             events,
@@ -192,7 +215,6 @@ class TransformExecutor:
         if in_wm is None:
             return out_wm
         return in_wm if out_wm is None or in_wm > out_wm else out_wm
-
 
     def execute(
         self,
@@ -227,51 +249,14 @@ class TransformExecutor:
                 )
             df.createOrReplaceTempView(alias)
 
-        result: DataFrame | None = None
-        for step in self.queries:
-            q = step["query"]
-            alias = step.get("alias")
-            df = spark.sql(q)
-            if alias:
-                df.createOrReplaceTempView(alias)
-            else:
-                result = df
-        if result is None:
-            raise TransformError("transform has no unaliased output step")
-
-        # drop system columns the inputs carried through, if selected
+        result = self._run_queries(spark, drop_op=False)
         v = self.dataset.vocab
-        drop = [c for c in (v.offset_column, v.system_time_column) if c in result.columns]
-        if drop:
-            result = result.drop(*drop)
-
         strategy = self.strategy
         if v.operation_type_column in result.columns and isinstance(
             strategy, MergeStrategyAppend
         ):
             strategy = _PassthroughOps(v)
-        writer = DataWriter(self.dataset, strategy)
-        in_wm = plan.get("input_watermark", self.input_watermark())
-        event = writer.write(
-            spark,
-            result,
-            system_time=system_time,
-            event_kind="ExecuteTransform",
-            extra_event={"query_inputs": plan["inputs"]},
-            explicit_watermark=in_wm,
-        )
-        if event is None:
-            # No output rows, but still record consumed intervals (and
-            # any watermark advance) so we don't reprocess (reference
-            # commits ExecuteTransform with empty new_data).
-            event = {
-                "kind": "ExecuteTransform",
-                "new_data": None,
-                "new_watermark": self._monotonic_wm(in_wm),
-                "query_inputs": plan["inputs"],
-            }
-            self.dataset.chain.append(event, system_time=system_time.isoformat())
-        return event
+        return self._commit_changelog(spark, result, plan, system_time, strategy)
 
 
 class AggregatingTransformExecutor(TransformExecutor):
@@ -357,27 +342,12 @@ class AggregatingTransformExecutor(TransformExecutor):
             alias
         )
 
-        result: DataFrame | None = None
-        for step in self.queries:
-            df = spark.sql(step["query"])
-            if step.get("alias"):
-                df.createOrReplaceTempView(step["alias"])
-            else:
-                result = df
-        if result is None:
-            raise TransformError("transform has no unaliased output step")
+        result = self._run_queries(spark, drop_op=True)
         missing = [k for k in self.group_keys if k not in result.columns]
         if missing:
             raise TransformError(
                 f"aggregation output must carry group keys; missing {missing}"
             )
-        drop = [
-            c
-            for c in (v.offset_column, v.system_time_column, v.operation_type_column)
-            if c in result.columns
-        ]
-        if drop:
-            result = result.drop(*drop)
 
         # previous derivative rows for the SAME affected keys; both diff
         # sides are key-restricted, so unaffected groups are untouched
@@ -385,7 +355,9 @@ class AggregatingTransformExecutor(TransformExecutor):
         if prev is not None:
             prev = prev.join(affected, on=self.group_keys, how="left_semi")
         events = MergeStrategySnapshot(self.group_keys, vocab=v).merge(prev, result)
-        return self._commit_changelog(spark, events, plan, system_time)
+        return self._commit_changelog(
+            spark, events, plan, system_time, _PassthroughOps(v)
+        )
 
 
 class StatefulTransformExecutor(TransformExecutor):
@@ -465,33 +437,20 @@ class StatefulTransformExecutor(TransformExecutor):
                     )
             state.createOrReplaceTempView(alias)
 
-        result: DataFrame | None = None
-        for step in self.queries:
-            df = spark.sql(step["query"])
-            if step.get("alias"):
-                df.createOrReplaceTempView(step["alias"])
-            else:
-                result = df
-        if result is None:
-            raise TransformError("transform has no unaliased output step")
+        result = self._run_queries(spark, drop_op=True)
         missing = [k for k in self.output_primary_key if k not in result.columns]
         if missing:
             raise TransformError(
                 f"stateful output must carry its primary key; missing {missing}"
             )
-        drop = [
-            c
-            for c in (v.offset_column, v.system_time_column, v.operation_type_column)
-            if c in result.columns
-        ]
-        if drop:
-            result = result.drop(*drop)
 
         prev = self.dataset.read(spark)
         events = MergeStrategySnapshot(self.output_primary_key, vocab=v).merge(
             prev, result
         )
-        return self._commit_changelog(spark, events, plan, system_time)
+        return self._commit_changelog(
+            spark, events, plan, system_time, _PassthroughOps(v)
+        )
 
 
 def make_transform_executor(dataset: Dataset) -> TransformExecutor:

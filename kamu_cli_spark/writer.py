@@ -15,9 +15,14 @@ Spark-first notes:
 - each committed slice is ONE sorted Parquet file (ODF DataSlice);
   ingest batches are bounded so this is fine — large backfills should
   go through multiple commits or compaction;
-- previous data is read via the ledger's file list; for snapshot/ledger
-  merges at scale, pair with a materialized state table to avoid the
-  full-history scan the reference itself flags (writer.rs:232 TODO).
+- the offset pass pins its sorted frame once; its single count job
+  also yields the row count, offset range and max event time the
+  commit records, and ``write`` releases the pin in its ``finally``;
+- previous data is read only for keyed strategies (ledger, snapshot,
+  changelog, upsert) — from the materialized latest-per-PK state when
+  fresh, else via the ledger's file list. Append and passthrough
+  commits never list the history (the reference's full-history scan,
+  writer.rs:232 TODO).
 """
 
 from __future__ import annotations
@@ -32,7 +37,7 @@ from pyspark.sql import types as T
 
 from kamu_cli_spark.dataset import Dataset
 from kamu_cli_spark.operators.merge import MergeStrategy
-from kamu_cli_spark.plans.offsets import assign_offsets
+from kamu_cli_spark.plans.offsets import AssignedOffsets, assign_offsets
 from kamu_cli_spark.vocab import DatasetVocabulary
 
 
@@ -218,7 +223,7 @@ class DataWriter:
         system_time: datetime,
         start_offset: int,
         source_event_time: datetime | None = None,
-    ) -> DataFrame:
+    ) -> AssignedOffsets:
         v = self.vocab
         fallback = source_event_time or system_time
         df = df.withColumn(
@@ -228,22 +233,23 @@ class DataWriter:
                 F.lit(fallback).cast("timestamp"),
             ),
         ).withColumn(v.system_time_column, F.lit(system_time).cast("timestamp"))
-        df = assign_offsets(
+        assigned = assign_offsets(
             df,
             self.strategy.sort_order(),
             start_offset=start_offset,
             offset_column=v.offset_column,
+            event_time_column=v.event_time_column,
         )
         data_cols = [c for c in df.columns if c not in v.system_columns()]
-        out = df.select(
-            v.offset_column,
-            v.operation_type_column,
-            v.system_time_column,
-            v.event_time_column,
-            *data_cols,
+        return assigned._replace(
+            df=assigned.df.select(
+                v.offset_column,
+                v.operation_type_column,
+                v.system_time_column,
+                v.event_time_column,
+                *data_cols,
+            )
         )
-        out._kamu_persisted = getattr(df, "_kamu_persisted", None)  # type: ignore[attr-defined]
-        return out
 
     def validate_schema_compatible(self, df: DataFrame) -> None:
         """Columns shared with the declared SetDataSchema must keep their
@@ -333,16 +339,17 @@ class DataWriter:
         self.validate_input(new)
         new = self.coerce_to_declared(new)
         new = self.fill_missing_declared(new)
-        # Prefer the materialized latest-per-PK state over a full-history
-        # scan: every PK-based strategy starts by projecting `prev`, and
+        # Only keyed strategies look at `prev`. They prefer the
+        # materialized latest-per-PK state over a full-history scan:
+        # every PK-based strategy starts by projecting `prev`, and
         # projection is idempotent, so the compact state is a drop-in
         # replacement (fixes the prev-data full-scan debt the reference
         # documents at writer.rs:232).
         prev = None
         pk = getattr(self.strategy, "primary_key", None)
-        if self.maintain_state and pk:
+        if pk and self.maintain_state:
             prev = self.dataset.read_state(spark, primary_key=pk)
-        if prev is None:
+        if pk and prev is None:
             prev = self.dataset.read(spark)
         if prev is not None:
             # additive evolution: brand-new batch columns appear in prev
@@ -356,17 +363,13 @@ class DataWriter:
         merged = self.ensure_event_time(merged)
 
         start_offset = self.dataset.chain.next_offset()
-        full = self.with_system_columns(
+        assigned = self.with_system_columns(
             merged, system_time, start_offset, source_event_time
         )
+        full = assigned.df
         try:
-            stats = full.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min(v.offset_column).alias("min_off"),
-                F.max(v.offset_column).alias("max_off"),
-                F.max(v.event_time_column).alias("max_et"),
-            ).collect()[0]
-            if stats["n"] == 0:
+            n = sum(assigned.counts.values())
+            if n == 0:
                 return None
 
             self.validate_schema_compatible(full)
@@ -381,9 +384,7 @@ class DataWriter:
                 ]
                 extras = [c for c in full.columns if c not in order]
                 if full.columns != order + extras:
-                    persisted = getattr(full, "_kamu_persisted", None)
                     full = full.select(*order, *extras)
-                    full._kamu_persisted = persisted  # type: ignore[attr-defined]
             fields = _schema_to_json(full.schema)
             if declared is None or [
                 (f["name"], f["type"]) for f in declared["fields"]
@@ -416,7 +417,7 @@ class DataWriter:
                 # reference emits no watermark when inputs have none)
                 new_wm = prev_wm
             else:
-                max_et = stats["max_et"]
+                max_et = assigned.max_event_time
                 if max_et is not None:
                     et_iso = max_et.replace(tzinfo=timezone.utc).isoformat()
                     new_wm = (
@@ -427,8 +428,8 @@ class DataWriter:
 
             linked = self.verify_object_links(full)
 
-            lo, hi = int(stats["min_off"]), int(stats["max_off"])
-            step = self.max_slice_records or (hi - lo + 1)
+            lo, hi = start_offset, start_offset + n - 1
+            step = self.max_slice_records or n
             bounds = [
                 (a, min(a + step - 1, hi)) for a in range(lo, hi + 1, step)
             ]
@@ -511,6 +512,4 @@ class DataWriter:
                 )
             return event
         finally:
-            cached = getattr(full, "_kamu_persisted", None)
-            if cached is not None:
-                cached.unpersist()
+            assigned.pinned.unpersist()

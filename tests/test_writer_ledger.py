@@ -8,13 +8,19 @@ sorted by offset.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
 from kamu_cli_spark.dataset import Dataset
 from kamu_cli_spark.ledger import ChainIntegrityError
-from kamu_cli_spark.operators import MergeStrategyLedger, MergeStrategySnapshot
+from kamu_cli_spark.operators import (
+    MergeStrategyAppend,
+    MergeStrategyChangelogStream,
+    MergeStrategyLedger,
+    MergeStrategySnapshot,
+    MergeStrategyUpsertStream,
+)
 from kamu_cli_spark.vocab import OperationType as Op
 from kamu_cli_spark.writer import DataWriter, WriterError
 
@@ -131,3 +137,172 @@ def test_read_between_offset_interval(spark, tmp_path):
     inc = ds.read_between(spark, prev_offset=1, new_offset=None)
     assert sorted(r["k"] for r in inc.collect()) == ["c", "d"]
     assert ds.read_between(spark, prev_offset=3, new_offset=None) is None
+
+
+# -- commit results pinned across writer refactors ---------------------
+
+_FIXED = [("a", 1, 1), ("b", 2, 2), ("c", 3, 3), ("d", 4, 4),
+          ("e", 5, 5), ("f", 6, 6), ("g", 7, 7), ("h", 8, 8)]
+
+
+def _batch(spark, rows, with_op=False):
+    """(k, v, hour[, op]) tuples → frame with distinct sort keys, so
+    offsets never depend on partitioning."""
+    if with_op:
+        return spark.createDataFrame(
+            [(op, k, v, T0 + timedelta(hours=h)) for k, v, h, op in rows],
+            "op int, k string, v int, event_time timestamp",
+        )
+    return spark.createDataFrame(
+        [(k, v, T0 + timedelta(hours=h)) for k, v, h in rows],
+        "k string, v int, event_time timestamp",
+    )
+
+
+def _commit_fixed_input(spark, root):
+    """Commit one fixed input through every merge strategy (keyed ones
+    twice, so the second commit merges against history) plus a chunked
+    append; return each dataset's data blocks as
+    (start, end, num_records, new_watermark, logical_hash)."""
+    second = [("b", 2, 2), ("c", 30, 9), ("e", 5, 5), ("i", 9, 10)]
+    upserts = [("a", 10, 9, Op.APPEND), ("b", 2, 2, Op.APPEND),
+               ("c", 3, 3, Op.RETRACT), ("z", 26, 11, Op.APPEND)]
+    cases = {
+        "append": (MergeStrategyAppend(), None, [_batch(spark, _FIXED)]),
+        "ledger": (MergeStrategyLedger(["k"]), None,
+                   [_batch(spark, _FIXED), _batch(spark, second)]),
+        "snapshot": (MergeStrategySnapshot(["k"]), None,
+                     [_batch(spark, _FIXED), _batch(spark, second)]),
+        "changelog": (MergeStrategyChangelogStream(["k"]), None, [_batch(
+            spark,
+            [(k, v, h, Op.APPEND) for k, v, h in _FIXED]
+            + [("a", 1, 9, Op.RETRACT)],
+            with_op=True,
+        )]),
+        "upsert": (MergeStrategyUpsertStream(["k"]), None, [
+            _batch(spark, [(k, v, h, Op.APPEND) for k, v, h in _FIXED],
+                   with_op=True),
+            _batch(spark, upserts, with_op=True),
+        ]),
+        "chunked": (MergeStrategyAppend(), 3, [_batch(spark, _FIXED)]),
+    }
+    out = {}
+    for name, (strategy, max_slice, batches) in cases.items():
+        ds = Dataset.create(root, name, system_time=T0.isoformat())
+        w = DataWriter(ds, strategy, compute_logical_hash=True,
+                       max_slice_records=max_slice)
+        for i, b in enumerate(batches):
+            w.write(spark, b, system_time=T0 + timedelta(days=i))
+        out[name] = [
+            (
+                nd["offset_interval"]["start"],
+                nd["offset_interval"]["end"],
+                nd["num_records"],
+                blk.event["new_watermark"],
+                nd["logical_hash"],
+            )
+            for blk in ds.chain.blocks()
+            if (nd := blk.event.get("new_data"))
+        ]
+    return out
+
+
+# offset intervals, num_records, watermarks and logical hashes of
+# _commit_fixed_input as committed before the writer took its row stats
+# from the offset pass. Physical hashes are not pinned: the Parquet
+# writer does not reproduce them run to run.
+_PINNED = {
+    'append': [
+        (0, 7, 8, '2024-01-01T08:00:00+00:00',
+         'f16202a301c20a464f270a760004dec982330c950fab38117018dc897d7e4810db8c9'),
+    ],
+    'ledger': [
+        (0, 7, 8, '2024-01-01T08:00:00+00:00',
+         'f16202a301c20a464f270a760004dec982330c950fab38117018dc897d7e4810db8c9'),
+        (8, 8, 1, '2024-01-01T10:00:00+00:00',
+         'f162084bd7a6a8e79afd94db1fbb6e680dd3aa8fcb831b55ac18f17ad36f45491dde0'),
+    ],
+    'snapshot': [
+        (0, 7, 8, '2024-01-01T08:00:00+00:00',
+         'f16202a301c20a464f270a760004dec982330c950fab38117018dc897d7e4810db8c9'),
+        (8, 15, 8, '2024-01-01T10:00:00+00:00',
+         'f1620ae463900313fca879eaeba276f0ee134ca9b863653a2cc042ffd15c5ad1a7650'),
+    ],
+    'changelog': [
+        (0, 8, 9, '2024-01-01T09:00:00+00:00',
+         'f16205ca70c151a7499664a985ec8f08eadfc746a2d850041f86d07f3dd756833dc4c'),
+    ],
+    'upsert': [
+        (0, 7, 8, '2024-01-01T08:00:00+00:00',
+         'f16202a301c20a464f270a760004dec982330c950fab38117018dc897d7e4810db8c9'),
+        (8, 11, 4, '2024-01-01T11:00:00+00:00',
+         'f16204936970ac168c57ce9fffd4c1e9049161994085952d7a6cfb0fec60623f08d3e'),
+    ],
+    'chunked': [
+        (0, 2, 3, None,
+         'f1620b1a42ed3e645161207ac72c80268d89c7f473ba0decaf37af840a93b0ce806e0'),
+        (3, 5, 3, None,
+         'f1620fd4141bbb72b2a43f07ef16aafa1429d26df2b03ab9bf03ef808774a610584df'),
+        (6, 7, 2, '2024-01-01T08:00:00+00:00',
+         'f1620844980fa212c3c58e627317d977439eda1d5720b10970ae9cd1583a05e2c2920'),
+    ],
+}
+
+
+def test_commit_results_pinned(spark, tmp_path):
+    assert _commit_fixed_input(spark, str(tmp_path)) == _PINNED
+
+
+def test_non_keyed_commits_never_read_history(spark, tmp_path, monkeypatch):
+    from kamu_cli_spark.transform import TransformExecutor, set_transform
+
+    ws = str(tmp_path)
+    root = Dataset.create(ws, "root", system_time=T0.isoformat())
+    w = DataWriter(root, MergeStrategyAppend())
+    w.write(spark, _batch(spark, _FIXED[:4]), system_time=T0)
+    deriv = Dataset.create(ws, "deriv", kind="Derivative", system_time=T0.isoformat())
+    set_transform(
+        deriv,
+        inputs={"root": root.path},
+        queries="select event_time, k, v from root where v % 2 = 0",
+        system_time=T0.isoformat(),
+    )
+    TransformExecutor(deriv).execute(spark, system_time=T0)
+
+    def no_history(*a, **k):
+        raise AssertionError("Dataset.read called by a non-keyed commit")
+
+    monkeypatch.setattr(Dataset, "read", no_history)
+    ev = w.write(spark, _batch(spark, _FIXED[4:]), system_time=T1)
+    assert ev["new_data"]["offset_interval"] == {"start": 4, "end": 7}
+    ev = TransformExecutor(deriv).execute(spark, system_time=T1)
+    assert ev["new_data"]["num_records"] == 2
+    assert ev["query_inputs"]["root"] == {"prev_offset": 3, "new_offset": 7}
+
+
+def test_commits_release_their_pins(spark, tmp_path):
+    jsc = spark.sparkContext._jsc
+
+    def write_counting_pins(fn):
+        before = jsc.getPersistentRDDs().size()
+        out = fn()
+        assert jsc.getPersistentRDDs().size() == before
+        return out
+
+    ds = Dataset.create(str(tmp_path), "pins", system_time=T0.isoformat())
+    w = DataWriter(ds, MergeStrategyLedger(["k"]))
+    poll = _batch(spark, _FIXED)
+    assert write_counting_pins(lambda: w.write(spark, poll, system_time=T0))
+    # up-to-date poll: the merge is empty, nothing commits
+    assert write_counting_pins(lambda: w.write(spark, poll, system_time=T1)) is None
+
+    def split_streaming_batch():
+        with pytest.raises(WriterError, match="single slice"):
+            DataWriter(ds, MergeStrategyAppend(), max_slice_records=2).write(
+                spark,
+                _batch(spark, [("x", 1, 20), ("y", 2, 21), ("z", 3, 22)]),
+                system_time=T2,
+                extra_event={"streaming_batch": {"source": "s", "id": 0}},
+            )
+
+    write_counting_pins(split_streaming_batch)

@@ -10,21 +10,20 @@ Each argument is a bench.py output file (full-record line with
 Floors only ever move DOWN: new_floor[q] = min(old_floor[q], every
 measurement of q across the given runs). Queries not yet in the map
 join it at their measured minimum (in whichever of headline/extra the
-run record places them). Prints a diff and rewrites BASELINE_PERQ.json
-in place.
+run record places them). A query floored in both sections (one that
+rotated between them) gets the lower floor in both, because
+check_regression.py lets the `extra` entry shadow the `headline` one.
+Prints a diff and rewrites BASELINE_PERQ.json in place.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASELINE_PATH = os.path.join(HERE, "BASELINE_PERQ.json")
-
-sys.path.insert(0, os.path.join(HERE, "tools"))
-from check_regression import load_run  # noqa: E402
 
 
 def load_run_split(path: str) -> tuple[dict[str, float], dict[str, float]]:
@@ -48,21 +47,15 @@ def load_run_split(path: str) -> tuple[dict[str, float], dict[str, float]]:
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    note = None
-    rnd = None
-    while args and args[0].startswith("--"):
-        if args[0] == "--note":
-            note = args[1]
-        elif args[0] == "--round":
-            rnd = int(args[1])
-        args = args[2:]
-    if not args:
-        raise SystemExit(__doc__)
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--note", help="replace the baseline's box_note")
+    p.add_argument("--round", type=int, help="set committed_round")
+    p.add_argument("runs", nargs="+", metavar="RUN", help="bench.py output file")
+    args = p.parse_args()
     with open(BASELINE_PATH) as f:
         base = json.load(f)
     n_changed = 0
-    for path in args:
+    for path in args.runs:
         hq, eq = load_run_split(path)
         for section, run in (("headline", hq), ("extra", eq)):
             floors = base.setdefault(section, {})
@@ -76,10 +69,18 @@ def main() -> int:
                         f"  ({os.path.basename(path)})"
                     )
                     n_changed += 1
-    if rnd is not None:
-        base["committed_round"] = rnd
-    if note is not None:
-        base["box_note"] = note
+    headline, extra = base["headline"], base["extra"]
+    for q in sorted(headline.keys() & extra.keys()):
+        low = min(headline[q], extra[q])
+        for section, floors in (("headline", headline), ("extra", extra)):
+            if floors[q] != low:
+                print(f"{section}/{q}: {floors[q]} -> {low:.3f}  (twin)")
+                floors[q] = low
+                n_changed += 1
+    if args.round is not None:
+        base["committed_round"] = args.round
+    if args.note is not None:
+        base["box_note"] = args.note
     with open(BASELINE_PATH, "w") as f:
         json.dump(base, f, indent=1, sort_keys=True)
         f.write("\n")
