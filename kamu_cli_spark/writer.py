@@ -4,20 +4,21 @@ Mirrors the reference's writer stages (writer.rs:106-1225; see
 SURVEY.md §2.4) as a sequence of declarative DataFrame transformations:
 
     validate → normalize timestamps → ensure event_time → MERGE →
-    system columns + deterministic offsets → schema check →
-    sorted Parquet slice → stats → commit AddData/ExecuteTransform
+    system columns + deterministic offsets → sorted Parquet slice(s)
+    (row count + max event time observed by the same job) → schema
+    check → hashes → commit AddData/ExecuteTransform
 
 Spark-first notes:
 
-- offsets are assigned with the scalable two-phase ranking in
-  :mod:`kamu_cli_spark.plans.offsets`, never a global single-partition
-  window;
-- each committed slice is ONE sorted Parquet file (ODF DataSlice);
-  ingest batches are bounded so this is fine — large backfills should
-  go through multiple commits or compaction;
-- the offset pass pins its sorted frame once; its single count job
-  also yields the row count, offset range and max event time the
-  commit records, and ``write`` releases the pin in its ``finally``;
+- a commit is one shuffle plus one write job: the merged batch is
+  shuffled into one partition and sorted there, offsets are the row
+  index in that sorted task (:mod:`kamu_cli_spark.plans.offsets`), and
+  the same task writes every slice file in offset order, starting a
+  new file after ``max_slice_records`` rows;
+- the write job observes the row count and ``max(event_time)``, so the
+  offset range and the watermark come from the job that wrote the data;
+- object-link checks, the logical hash and keyed-state maintenance
+  read the written files, never the merge lineage again;
 - previous data is read only for keyed strategies (ledger, snapshot,
   changelog, upsert) — from the materialized latest-per-PK state when
   fresh, else via the ledger's file list. Append and passthrough
@@ -28,21 +29,29 @@ Spark-first notes:
 from __future__ import annotations
 
 import os
+import re
+import shutil
+import uuid
 from datetime import datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kamu_cli_spark.dataset import Dataset
 from kamu_cli_spark.operators.merge import MergeStrategy
-from kamu_cli_spark.plans.offsets import AssignedOffsets, assign_offsets
+from kamu_cli_spark.plans.offsets import assign_offsets
 from kamu_cli_spark.vocab import DatasetVocabulary
 
 
 class WriterError(Exception):
     pass
+
+
+# Spark's per-task file counter: part-00000-<uuid>-c000, -c001, ...,
+# -c1000 — numeric, so name order breaks past 999 files
+_FILE_COUNTER = re.compile(r"-c(\d+)\.snappy\.parquet$")
 
 
 def _schema_to_json(schema: T.StructType) -> list[dict[str, Any]]:
@@ -71,9 +80,9 @@ class DataWriter:
         latest-per-PK materialized state up to date per commit so merges
         read O(|keys|) instead of O(|history|). `max_slice_records`:
         split oversized batches into multiple sequential slice commits —
-        each ODF slice is one sorted file, so a single-file write of a
-        huge backfill would bottleneck on one task; chunking keeps every
-        file bounded while offsets stay dense across the chunks.
+        each ODF slice is one sorted file; the one sorted write task
+        starts a new file every `max_slice_records` rows, so every file
+        stays bounded while offsets stay dense across the chunks.
         `infer_schema`: apply the reference's best-effort ingest
         inference (rename system-column clashes, coerce event_time) —
         the ingest paths enable it; direct writer use stays strict."""
@@ -223,7 +232,7 @@ class DataWriter:
         system_time: datetime,
         start_offset: int,
         source_event_time: datetime | None = None,
-    ) -> AssignedOffsets:
+    ) -> DataFrame:
         v = self.vocab
         fallback = source_event_time or system_time
         df = df.withColumn(
@@ -233,22 +242,18 @@ class DataWriter:
                 F.lit(fallback).cast("timestamp"),
             ),
         ).withColumn(v.system_time_column, F.lit(system_time).cast("timestamp"))
-        assigned = assign_offsets(
+        data_cols = [c for c in df.columns if c not in v.system_columns()]
+        return assign_offsets(
             df,
             self.strategy.sort_order(),
             start_offset=start_offset,
             offset_column=v.offset_column,
-            event_time_column=v.event_time_column,
-        )
-        data_cols = [c for c in df.columns if c not in v.system_columns()]
-        return assigned._replace(
-            df=assigned.df.select(
-                v.offset_column,
-                v.operation_type_column,
-                v.system_time_column,
-                v.event_time_column,
-                *data_cols,
-            )
+        ).select(
+            v.offset_column,
+            v.operation_type_column,
+            v.system_time_column,
+            v.event_time_column,
+            *data_cols,
         )
 
     def validate_schema_compatible(self, df: DataFrame) -> None:
@@ -286,29 +291,33 @@ class DataWriter:
                 df = df.withColumn(f["name"], F.lit(None).cast(f["type"]))
         return df
 
-    def write_slice(self, df: DataFrame, seq: int, start: int, end: int) -> str:
-        """Write ONE sorted snappy Parquet file for the slice."""
-        import uuid
+    def write_slice(
+        self, df: DataFrame, tmp_dir: str
+    ) -> tuple[list[str], int, datetime | None]:
+        """Write the whole commit under `tmp_dir` with ONE Spark job and
+        return (staged files in offset order, row count, max event time).
 
-        # The committed filename carries a unique nonce: two writers racing
-        # the same (seq, start, end) can never target the same final path,
-        # so the loser of the chain CAS leaves only an orphan file (reaped
-        # by compaction GC) and can't overwrite the winner's durable bytes.
-        rel = f"data/{seq:06d}-{start}-{end}-{uuid.uuid4().hex[:8]}.parquet"
-        final_path = os.path.join(self.dataset.path, rel)
-        tmp_dir = os.path.join(self.dataset.path, f".tmp-{uuid.uuid4().hex[:8]}")
+        `df` is one partition sorted by offset, so one task writes every
+        file, starting a new one after `max_slice_records` rows (0: no
+        limit — set explicitly, so a session-wide
+        ``spark.sql.files.maxRecordsPerFile`` cannot split a slice). The
+        count and max event time are observed by that same job."""
+        obs = Observation()
         (
-            df.coalesce(1)
-            .sortWithinPartitions(self.vocab.offset_column)
-            .write.mode("overwrite")
+            df.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.max(self.vocab.event_time_column).alias("max_et"),
+            )
+            .write.option("maxRecordsPerFile", self.max_slice_records or 0)
             .parquet(tmp_dir, compression="snappy")
         )
-        part = [f for f in os.listdir(tmp_dir) if f.endswith(".parquet")]
-        os.replace(os.path.join(tmp_dir, part[0]), final_path)
-        for f in os.listdir(tmp_dir):
-            os.remove(os.path.join(tmp_dir, f))
-        os.rmdir(tmp_dir)
-        return rel
+        stats = obs.get
+        staged = sorted(
+            (f for f in os.listdir(tmp_dir) if _FILE_COUNTER.search(f)),
+            key=lambda f: int(_FILE_COUNTER.search(f).group(1)),
+        )
+        return [os.path.join(tmp_dir, f) for f in staged], stats["n"], stats["max_et"]
 
     # -- entry point ---------------------------------------------------
 
@@ -363,28 +372,54 @@ class DataWriter:
         merged = self.ensure_event_time(merged)
 
         start_offset = self.dataset.chain.next_offset()
-        assigned = self.with_system_columns(
+        full = self.with_system_columns(
             merged, system_time, start_offset, source_event_time
         )
-        full = assigned.df
+        declared = self.dataset.schema_event()
+        if declared is not None:
+            # keep the declared column order stable across writes;
+            # evolved (new) columns append at the end
+            order = [f["name"] for f in declared["fields"] if f["name"] in full.columns]
+            extras = [c for c in full.columns if c not in order]
+            if full.columns != order + extras:
+                full = full.select(*order, *extras)
+
+        def read_written(paths: list[str]) -> DataFrame:
+            # with the lineage's schema: the same types, and no
+            # footer-sampling job
+            return spark.read.schema(full.schema).parquet(*paths)
+
+        tmp_dir = os.path.join(self.dataset.path, f".tmp-{uuid.uuid4().hex[:8]}")
         try:
-            n = sum(assigned.counts.values())
+            staged, n, max_et = self.write_slice(full, tmp_dir)
             if n == 0:
                 return None
 
             self.validate_schema_compatible(full)
-            declared = self.dataset.schema_event()
-            if declared is not None:
-                # keep the declared column order stable across writes;
-                # evolved (new) columns append at the end
-                order = [
-                    f["name"]
-                    for f in declared["fields"]
-                    if f["name"] in full.columns
-                ]
-                extras = [c for c in full.columns if c not in order]
-                if full.columns != order + extras:
-                    full = full.select(*order, *extras)
+            lo, hi = start_offset, start_offset + n - 1
+            step = self.max_slice_records or n
+            bounds = [
+                (a, min(a + step - 1, hi)) for a in range(lo, hi + 1, step)
+            ]
+            if len(staged) != len(bounds):
+                raise WriterError(
+                    f"slice write produced {len(staged)} files for "
+                    f"{len(bounds)} slices of offsets {lo}..{hi}"
+                )
+            if len(bounds) > 1 and (extra_event or {}).get("streaming_batch"):
+                # the replay-dedup marker rides on the LAST slice block;
+                # a crash between slice commits would leave earlier
+                # slices durable but unmarked and the replayed batch
+                # would duplicate them — fail loudly instead of
+                # breaking the sink's exactly-once contract
+                raise WriterError(
+                    "a streaming batch must commit as a single slice: "
+                    f"{len(bounds)} slices under max_slice_records="
+                    f"{self.max_slice_records}; raise it or split the "
+                    "stream upstream"
+                )
+            linked = self.verify_object_links(read_written(staged))
+
             fields = _schema_to_json(full.schema)
             if declared is None or [
                 (f["name"], f["type"]) for f in declared["fields"]
@@ -416,50 +451,27 @@ class DataWriter:
                 # the inputs claimed — keep the previous watermark (the
                 # reference emits no watermark when inputs have none)
                 new_wm = prev_wm
+            elif max_et is not None:
+                et_iso = max_et.replace(tzinfo=timezone.utc).isoformat()
+                new_wm = et_iso if prev_wm is None or et_iso > prev_wm else prev_wm
             else:
-                max_et = assigned.max_event_time
-                if max_et is not None:
-                    et_iso = max_et.replace(tzinfo=timezone.utc).isoformat()
-                    new_wm = (
-                        et_iso if prev_wm is None or et_iso > prev_wm else prev_wm
-                    )
-                else:
-                    new_wm = prev_wm
+                new_wm = prev_wm
 
-            linked = self.verify_object_links(full)
-
-            lo, hi = start_offset, start_offset + n - 1
-            step = self.max_slice_records or n
-            bounds = [
-                (a, min(a + step - 1, hi)) for a in range(lo, hi + 1, step)
-            ]
-            if len(bounds) > 1 and (extra_event or {}).get("streaming_batch"):
-                # the replay-dedup marker rides on the LAST slice block;
-                # a crash between slice commits would leave earlier
-                # slices durable but unmarked and the replayed batch
-                # would duplicate them — fail loudly instead of
-                # breaking the sink's exactly-once contract
-                raise WriterError(
-                    "a streaming batch must commit as a single slice: "
-                    f"{len(bounds)} slices under max_slice_records="
-                    f"{self.max_slice_records}; raise it or split the "
-                    "stream upstream"
-                )
             event = None
-            for a, b in bounds:
+            committed = []
+            for (a, b), src in zip(bounds, staged):
                 last = b == hi
-                part = (
-                    full
-                    if len(bounds) == 1
-                    else full.filter(
-                        (F.col(v.offset_column) >= a) & (F.col(v.offset_column) <= b)
-                    )
-                )
+                # The committed filename carries a unique nonce: two
+                # writers racing the same (seq, start, end) can never
+                # target the same final path, so the loser of the chain
+                # CAS leaves only an orphan file (reaped by compaction GC)
+                # and can't overwrite the winner's durable bytes.
                 seq = len(self.dataset.chain)
-                rel = self.write_slice(part, seq, a, b)
-                phash = physical_hash(os.path.join(self.dataset.path, rel))
+                rel = f"data/{seq:06d}-{a}-{b}-{uuid.uuid4().hex[:8]}.parquet"
+                path = os.path.join(self.dataset.path, rel)
+                os.replace(src, path)
                 lhash = (
-                    logical_hash(part, v.offset_column)
+                    logical_hash(read_written([path]), v.offset_column)
                     if self.compute_logical_hash
                     else None
                 )
@@ -469,8 +481,8 @@ class DataWriter:
                         "path": rel,
                         "offset_interval": {"start": a, "end": b},
                         "num_records": b - a + 1,
-                        "size": os.path.getsize(os.path.join(self.dataset.path, rel)),
-                        "physical_hash": phash,
+                        "size": os.path.getsize(path),
+                        "physical_hash": physical_hash(path),
                         **(
                             {
                                 "logical_hash": lhash,
@@ -495,21 +507,23 @@ class DataWriter:
                     # an orphan would surface uncommitted rows in streaming
                     # output until clean_orphan_slices() runs.
                     try:
-                        os.remove(os.path.join(self.dataset.path, rel))
+                        os.remove(path)
                     except OSError:
                         pass
                     raise
+                committed.append(path)
 
             if self.maintain_state and pk:
                 from kamu_cli_spark.operators.merge import (
                     project_changelog_keep_retractions,
                 )
 
-                combined = full if prev is None else prev.unionByName(full)
+                written = read_written(committed)
+                combined = written if prev is None else prev.unionByName(written)
                 self.dataset.write_state(
                     project_changelog_keep_retractions(combined, pk, v),
                     primary_key=pk,
                 )
             return event
         finally:
-            assigned.pinned.unpersist()
+            shutil.rmtree(tmp_dir, ignore_errors=True)

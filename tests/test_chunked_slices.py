@@ -5,7 +5,7 @@ from __future__ import annotations
 from datetime import datetime, timezone
 
 from kamu_cli_spark.dataset import Dataset
-from kamu_cli_spark.operators import MergeStrategyLedger
+from kamu_cli_spark.operators import MergeStrategyAppend, MergeStrategyLedger
 from kamu_cli_spark.verification import verify_dataset
 from kamu_cli_spark.writer import DataWriter
 
@@ -46,3 +46,22 @@ def test_chunked_slice_commits(spark, tmp_path):
         system_time=T0,
     )
     assert ev2["new_data"]["offset_interval"] == {"start": 100, "end": 100}
+
+
+def test_session_max_records_per_file_cannot_split_a_slice(spark, tmp_path):
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        ds = Dataset.create(str(tmp_path), "conf", system_time=T0.isoformat())
+        ev = DataWriter(ds, MergeStrategyAppend()).write(
+            spark, spark.range(5).selectExpr("id as v"), system_time=T0
+        )
+    finally:
+        spark.conf.set(key, old)
+
+    assert ev["new_data"]["num_records"] == 5
+    files = ds.chain.data_files()
+    assert [f["offset_interval"] for f in files] == [{"start": 0, "end": 4}]
+    assert sorted(r["v"] for r in ds.read(spark).collect()) == list(range(5))
+    verify_dataset(spark, ds)

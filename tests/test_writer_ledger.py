@@ -8,12 +8,16 @@ sorted by offset.
 
 from __future__ import annotations
 
+import os
+import uuid
 from datetime import datetime, timedelta, timezone
 
 import pytest
+from pyspark.sql import functions as F
 
 from kamu_cli_spark.dataset import Dataset
 from kamu_cli_spark.ledger import ChainIntegrityError
+from kamu_cli_spark.ledger.chain import MetadataChain
 from kamu_cli_spark.operators import (
     MergeStrategyAppend,
     MergeStrategyChangelogStream,
@@ -21,6 +25,7 @@ from kamu_cli_spark.operators import (
     MergeStrategySnapshot,
     MergeStrategyUpsertStream,
 )
+from kamu_cli_spark.verification import verify_dataset
 from kamu_cli_spark.vocab import OperationType as Op
 from kamu_cli_spark.writer import DataWriter, WriterError
 
@@ -306,3 +311,125 @@ def test_commits_release_their_pins(spark, tmp_path):
             )
 
     write_counting_pins(split_streaming_batch)
+
+
+# -- a commit is one shuffle plus one write job ------------------------
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted in a job group
+    of fn's own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commits_run_two_jobs(spark, tmp_path):
+    from kamu_cli_spark.transform import TransformExecutor, set_transform
+
+    ws = str(tmp_path)
+    root = Dataset.create(ws, "root", system_time=T0.isoformat())
+    append = DataWriter(root, MergeStrategyAppend())
+    batch = _batch(spark, _FIXED)
+    ev, jobs = _jobs_run_by(spark, lambda: append.write(spark, batch, system_time=T0))
+    assert ev["new_data"]["num_records"] == 8
+    assert jobs == 2
+
+    # keyed-state upkeep writes its own files; the commit itself is 2 jobs
+    big = Dataset.create(ws, "big", system_time=T0.isoformat())
+    chunked = DataWriter(big, MergeStrategyLedger(["k"]), max_slice_records=40,
+                         maintain_state=False)
+    batch = spark.range(100).selectExpr("cast(id as string) as k", "id as v")
+    _, jobs = _jobs_run_by(spark, lambda: chunked.write(
+        spark, batch, system_time=T0, source_event_time=T0))
+    assert [f["num_records"] for f in big.chain.data_files()] == [40, 40, 20]
+    assert jobs == 2
+
+    deriv = Dataset.create(ws, "deriv", kind="Derivative", system_time=T0.isoformat())
+    set_transform(
+        deriv,
+        inputs={"root": root.path},
+        queries="select event_time, k, v from root where v % 2 = 0",
+        system_time=T0.isoformat(),
+    )
+    pull = TransformExecutor(deriv)
+    ev, jobs = _jobs_run_by(spark, lambda: pull.execute(spark, system_time=T0))
+    assert ev["new_data"]["num_records"] == 4
+    assert jobs == 2
+
+
+# -- failed commits leave nothing behind --------------------------------
+
+
+def _assert_nothing_left(ds, blocks):
+    assert len(ds.chain) == blocks
+    assert not [d for d in os.listdir(ds.path) if d.startswith(".tmp-")]
+    live = sorted(os.path.basename(d["path"]) for d in ds.chain.data_files())
+    assert sorted(os.listdir(os.path.join(ds.path, "data"))) == live
+
+
+def test_failing_batch_appends_nothing(spark, tmp_path):
+    ds = Dataset.create(str(tmp_path), "boom", system_time=T0.isoformat())
+    w = DataWriter(ds, MergeStrategyAppend())
+    bad = spark.range(8).select(
+        F.when(F.col("id") == 5, F.raise_error(F.lit("boom"))).otherwise(F.col("id")).alias("v")
+    )
+    with pytest.raises(Exception, match="boom"):
+        w.write(spark, bad, system_time=T0)
+    # not even the SetDataSchema block: nothing was committed
+    _assert_nothing_left(ds, 1)
+
+    ev = w.write(spark, spark.range(3).selectExpr("id as v"), system_time=T0)
+    assert ev["new_data"]["offset_interval"] == {"start": 0, "end": 2}
+
+
+def test_chunked_commit_failing_mid_way_keeps_its_first_chunks(
+    spark, tmp_path, monkeypatch
+):
+    ds = Dataset.create(str(tmp_path), "torn", system_time=T0.isoformat())
+    w = DataWriter(ds, MergeStrategyAppend(), max_slice_records=3)
+    real_append = MetadataChain.append
+    data_appends = []
+
+    def append_failing_second_slice(self, event, *a, **k):
+        if event.get("new_data"):
+            data_appends.append(event)
+            if len(data_appends) == 2:
+                raise OSError("disk full")
+        return real_append(self, event, *a, **k)
+
+    monkeypatch.setattr(MetadataChain, "append", append_failing_second_slice)
+    with pytest.raises(OSError, match="disk full"):
+        w.write(spark, _batch(spark, _FIXED), system_time=T0)
+    monkeypatch.setattr(MetadataChain, "append", real_append)
+
+    # Seed, SetDataSchema and the first 3-row slice
+    _assert_nothing_left(ds, 3)
+    assert [f["offset_interval"] for f in ds.chain.data_files()] == [
+        {"start": 0, "end": 2}
+    ]
+    verify_dataset(spark, ds)
+
+    ev = w.write(spark, _batch(spark, [("x", 1, 20), ("y", 2, 21)]), system_time=T1)
+    assert ev["new_data"]["offset_interval"] == {"start": 3, "end": 4}
+    verify_dataset(spark, ds)
+
+
+def test_split_streaming_batch_appends_nothing(spark, tmp_path):
+    ds = Dataset.create(str(tmp_path), "stream", system_time=T0.isoformat())
+    with pytest.raises(WriterError, match="single slice"):
+        DataWriter(ds, MergeStrategyAppend(), max_slice_records=2).write(
+            spark,
+            _batch(spark, [("x", 1, 20), ("y", 2, 21), ("z", 3, 22)]),
+            system_time=T0,
+            extra_event={"streaming_batch": {"source": "s", "id": 0}},
+        )
+    _assert_nothing_left(ds, 1)
