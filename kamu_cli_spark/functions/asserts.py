@@ -8,7 +8,7 @@ no extra pass, no collect; stays inside codegen."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -34,13 +34,3 @@ def assert_list_elements_not_null(col: Column | str, name: str | None = None) ->
         F.raise_error(F.lit(f"unexpected null element in {label}"))
     )
 
-
-def coerce_columns_not_null(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Assert non-nullness for the given columns (the post-join
-    nullability repair in the reference's DataFrameExt). Spark treats
-    schema nullability as advisory, so the runtime assert is the
-    meaningful part; the flag itself is left as-is."""
-    out = df
-    for c in columns:
-        out = out.withColumn(c, assert_not_null(c))
-    return out

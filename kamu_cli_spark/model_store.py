@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kamu_cli_spark.dataset import Dataset
 from kamu_cli_spark.operators.merge import MergeStrategySnapshot, project_changelog
+from kamu_cli_spark.operators.util import pinned
 from kamu_cli_spark.writer import DataWriter
 
 MODEL_SCHEMA = "cid int, centroid array<bigint>"
@@ -471,28 +472,48 @@ def save_kmv_sketch(
     shingle-free docs yields an empty partial, and raising inside
     foreachBatch kills the whole stream (the round-13 flaky-test
     mechanism; tests/test_kmv_sketch.py pins the guard)."""
+    return _save_sketch(
+        spark, dataset, sketch, ["source", "u"], ["source", "u"],
+        system_time, source_event_time, if_empty,
+    )
+
+
+def _save_sketch(
+    spark: SparkSession,
+    dataset: Dataset,
+    sketch: DataFrame,
+    cols: list[str],
+    pk: list[str],
+    system_time: Any,
+    source_event_time: Any,
+    if_empty: str,
+) -> dict | None:
+    """The KMV/CMS/HLL savers' one commit: check the sketch's columns,
+    then commit it as one snapshot poll keyed on `pk`."""
     if if_empty not in ("raise", "skip"):
         raise ValueError(f"if_empty must be 'raise' or 'skip', got {if_empty!r}")
-    cols = set(sketch.columns)
-    if cols != {"source", "u"}:
-        raise ValueError(f"expected (source, u) sketch rows, got {sorted(cols)}")
+    if set(sketch.columns) != set(cols):
+        raise ValueError(
+            f"expected ({', '.join(cols)}) sketch rows, "
+            f"got {sorted(sketch.columns)}"
+        )
     # the incremental pattern merges the LEDGER's own state with a
     # fresh partial, so the input's lineage reads the dataset being
-    # written — materialize the (KB-sized) sketch first or the
-    # snapshot diff re-evaluates it against files the commit is
-    # concurrently replacing (tests/test_kmv_sketch.py pins this)
-    sketch = sketch.select("source", "u").localCheckpoint(eager=True)
-    if not sketch.head(1):
-        if if_empty == "skip":
-            return None
-        raise ValueError("refusing to commit an empty sketch")
-    w = DataWriter(dataset, MergeStrategySnapshot(["source", "u"]))
-    return w.write(
-        spark,
-        sketch.select("source", "u"),
-        system_time=system_time,
-        source_event_time=source_event_time,
-    )
+    # written — pin the (KB-sized) sketch first or the snapshot diff
+    # re-evaluates it against files the commit is concurrently
+    # replacing (tests/test_kmv_sketch.py pins this). Released once
+    # the commit has written its slice.
+    with pinned(sketch.select(*cols)) as sketch:
+        if not sketch.head(1):
+            if if_empty == "skip":
+                return None
+            raise ValueError("refusing to commit an empty sketch")
+        return DataWriter(dataset, MergeStrategySnapshot(pk)).write(
+            spark,
+            sketch,
+            system_time=system_time,
+            source_event_time=source_event_time,
+        )
 
 
 def load_kmv_sketch(
@@ -536,27 +557,9 @@ def save_cms_sketch(
     kills the stream (the round-13 flaky-test mechanism;
     tests/test_cms.py pins the guard with a forced gram-free first
     micro-batch)."""
-    if if_empty not in ("raise", "skip"):
-        raise ValueError(f"if_empty must be 'raise' or 'skip', got {if_empty!r}")
-    cols = set(sketch.columns)
-    if cols != {"row", "bucket", "cnt"}:
-        raise ValueError(
-            f"expected (row, bucket, cnt) sketch rows, got {sorted(cols)}"
-        )
-    # same materialize-before-commit rule as save_kmv_sketch: the
-    # incremental pattern's input lineage reads the dataset being
-    # written
-    sketch = sketch.select("row", "bucket", "cnt").localCheckpoint(eager=True)
-    if not sketch.head(1):
-        if if_empty == "skip":
-            return None
-        raise ValueError("refusing to commit an empty sketch")
-    w = DataWriter(dataset, MergeStrategySnapshot(["row", "bucket"]))
-    return w.write(
-        spark,
-        sketch.select("row", "bucket", "cnt"),
-        system_time=system_time,
-        source_event_time=source_event_time,
+    return _save_sketch(
+        spark, dataset, sketch, ["row", "bucket", "cnt"], ["row", "bucket"],
+        system_time, source_event_time, if_empty,
     )
 
 
@@ -580,29 +583,9 @@ def save_hll_sketch(
     (default) or ``"skip"`` — streaming foreachBatch sinks MUST use
     ``"skip"`` (a shingle-free micro-batch yields an empty partial;
     raising inside foreachBatch kills the stream)."""
-    if if_empty not in ("raise", "skip"):
-        raise ValueError(f"if_empty must be 'raise' or 'skip', got {if_empty!r}")
-    cols = set(sketch.columns)
-    if cols != {"source", "register", "rho"}:
-        raise ValueError(
-            f"expected (source, register, rho) sketch rows, got {sorted(cols)}"
-        )
-    # same materialize-before-commit rule as the KMV/CMS savers: the
-    # incremental pattern's input lineage reads the dataset being
-    # written
-    sketch = sketch.select("source", "register", "rho").localCheckpoint(
-        eager=True
-    )
-    if not sketch.head(1):
-        if if_empty == "skip":
-            return None
-        raise ValueError("refusing to commit an empty sketch")
-    w = DataWriter(dataset, MergeStrategySnapshot(["source", "register"]))
-    return w.write(
-        spark,
-        sketch.select("source", "register", "rho"),
-        system_time=system_time,
-        source_event_time=source_event_time,
+    return _save_sketch(
+        spark, dataset, sketch, ["source", "register", "rho"],
+        ["source", "register"], system_time, source_event_time, if_empty,
     )
 
 

@@ -401,16 +401,11 @@ def asof_join_adaptive(
             "the left side and is not stream-legal; leave it as None "
             "(auto) or False for a streaming left"
         )
-    if left.isStreaming:
-        size = _ADAPTIVE_LEFT_BYTES + 1  # streaming → kernel path
-    else:
-        try:
-            size = int(
-                left._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            size = _ADAPTIVE_LEFT_BYTES + 1  # unknown → assume big
-    if left.isStreaming or size > _ADAPTIVE_LEFT_BYTES:
+    from kamu_cli_spark.operators.util import plan_bytes
+
+    # streaming → kernel path; unknown stats → assume big
+    size = None if left.isStreaming else plan_bytes(left)
+    if size is None or size > _ADAPTIVE_LEFT_BYTES:
         return asof_join_broadcast(
             left, right, on, left_time, right_time, right_values,
             suffix, strict,

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from kamu_cli_spark.operators.text import tokens
+from kamu_cli_spark.operators.util import pin
 
 
 def _word_vocab(corpus: DataFrame, text_col: str, lowercase: bool) -> DataFrame:
@@ -75,7 +76,11 @@ def bpe_fit(
 
     The returned frame is a lazy, vocabulary-bounded DataFrame, so it
     composes with the model store exactly like the k-means centroid
-    table.
+    table. It is a result pin: its first action materializes the
+    merge table once, and the executor-loss hazard of
+    :func:`~kamu_cli_spark.operators.util.pinned` applies to it —
+    collect it (≤ n_merges rows) or save it to the model store to
+    keep it past that.
 
     r14 fusion: every merge decision is a pure function of the
     (word, cnt) VOCABULARY — bounded by the language, never the corpus
@@ -156,14 +161,14 @@ def bpe_fit(
     # the vocabulary-bounded final fold and the induction kernel run on
     # the single task.
     #
-    # Lazy localCheckpoint (ADVICE r14): the frame stays fully lazy (no
-    # job at fit time), but the FIRST action materializes the bounded
+    # Lazy pin (ADVICE r14): the frame stays fully lazy (no job at fit
+    # time), but the FIRST action materializes the bounded
     # merge table (≤ n_merges rows), so a fit-then-apply-then-save flow
     # replays the corpus scan + induction once, not once per
     # consumption.
-    return vocab.coalesce(1).mapInPandas(
+    return pin(vocab.coalesce(1).mapInPandas(
         induce, "rank int, left string, right string, pair_count long"
-    ).localCheckpoint(eager=False)
+    ), eager=False)
 
 
 def bpe_apply(

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from kamu_cli_spark.operators.util import pin, pinned, release, widen_if_narrow
+
 E6 = 1_000_000
 
 
@@ -354,30 +356,25 @@ def kmeans_fit(
         raise ValueError("k must be positive")
     if n_updates < 0:
         raise ValueError("n_updates must be non-negative")
-    # Widen BEFORE persisting: every pass is compute-bound (O(k·dim)
+    # Widen BEFORE pinning: every pass is compute-bound (O(k·dim)
     # per row), and a 512 MB parquet scans into ~6 partitions — the
     # k=6400 updates ran 6-wide on 32 cores until this. At real scale
     # the scan already yields thousands of partitions and the widen is
     # a no-op; the decision reads Catalyst stats, not the RDD (see
     # util.widen_if_narrow).
-    from kamu_cli_spark.operators.util import widen_if_narrow
-
     qdf = widen_if_narrow(
         df.select(F.col(id_col), quantize_e6(vec_col).alias("__qe")),
         df.sparkSession.sparkContext.defaultParallelism,
     )
-    qdf = qdf.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with pinned(qdf, StorageLevel.MEMORY_AND_DISK, eager=False) as qdf:
         return _fit_quantized(qdf, id_col, k, n_updates)
-    finally:
-        qdf.unpersist()
 
 
 def _fit_quantized(
     qdf: DataFrame, id_col: str, k: int, n_updates: int
 ) -> list[tuple[int, list[int]]]:
     """Lloyd fit over a pre-quantized (id, __qe) frame the CALLER owns
-    (and should have persisted — every pass below re-reads it)."""
+    (and should have pinned — every pass below re-reads it)."""
     seed_rows = qdf.orderBy(id_col).limit(k).collect()  # bounded: k rows
     cents = [(i, list(r["__qe"])) for i, r in enumerate(seed_rows)]
     for _ in range(n_updates):
@@ -414,8 +411,6 @@ def kmeans_apply(
     # narrow batch scan would run it 6-wide on 32 cores (streams keep
     # their micro-batch partitioning; widen_if_narrow passes them
     # through)
-    from kamu_cli_spark.operators.util import widen_if_narrow
-
     qdf = widen_if_narrow(
         df.select(F.col(id_col), quantize_e6(vec_col).alias("__qe")),
         df.sparkSession.sparkContext.defaultParallelism,
@@ -561,37 +556,33 @@ def semantic_dedup(
     # sf100 k=6400). localCheckpoint stores only (id, cluster) — 12
     # bytes/row — and truncates the scoring lineage.
     if centroids is not None:
-        assign = kmeans_apply(df, centroids, vec_col, id_col).select(
-            id_col, "cluster"
-        ).localCheckpoint()
+        assign = pin(
+            kmeans_apply(df, centroids, vec_col, id_col).select(
+                id_col, "cluster"
+            )
+        )
     else:
-        # fit + final assignment over ONE cached quantized frame:
+        # fit + final assignment over ONE pinned quantized frame:
         # kmeans_assign re-scanned and re-quantized the corpus for the
-        # apply pass even though the fit had just cached exactly those
+        # apply pass even though the fit had just pinned exactly those
         # vectors (r15 phase profile: the fit chain was 2.5 s of the
         # 4.4 s sf0.1 total; at scale the duplicate pass is a full
-        # corpus scan). The eager checkpoint right below materializes
-        # the assignment while the cache is still alive, so the
-        # unpersist is safe.
-        from kamu_cli_spark.operators.util import widen_if_narrow
-
+        # corpus scan). The eager pin right below materializes the
+        # assignment while qdf is still pinned, so its release is safe.
         qdf = widen_if_narrow(
             df.select(F.col(id_col), quantize_e6(vec_col).alias("__qe")),
             df.sparkSession.sparkContext.defaultParallelism,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+        )
+        with pinned(qdf, StorageLevel.MEMORY_AND_DISK, eager=False) as qdf:
             cents = _fit_quantized(qdf, id_col, k, n_updates)
             if cents:
-                assign = _assign(qdf, cents).select(
-                    id_col, "cluster"
-                ).localCheckpoint()
+                assign = pin(_assign(qdf, cents).select(id_col, "cluster"))
             else:  # empty corpus: same null-assignment shape as apply
-                assign = qdf.select(
-                    id_col,
-                    F.lit(None).cast("int").alias("cluster"),
-                ).localCheckpoint()
-        finally:
-            qdf.unpersist()
+                assign = pin(
+                    qdf.select(
+                        id_col, F.lit(None).cast("int").alias("cluster")
+                    )
+                )
     base = df.select(
         F.col(id_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__ve"),
@@ -931,7 +922,7 @@ def kcenter_select(
     caller (an eval set, a seed list — never data-sized), giving k
     iterations of {TakeOrderedAndProject top-1 (map-side pruned) +
     an incremental ``least(md, dist-to-newest)`` column update} over
-    ONE persisted quantized scan — the kmeans/pagerank iterative
+    ONE pinned quantized scan — the kmeans/pagerank iterative
     shape, with localCheckpoint every 4 rounds to keep lineage O(1).
     Driver traffic is 1 row per iteration (the same bounded contract
     as BPE's merge loop). Output: (rank, id, dist_e12) — dist_e12 is
@@ -942,33 +933,39 @@ def kcenter_select(
         raise ValueError("kcenter_select: k must be >= 1")
     q = df.select(
         F.col(id_col).alias("id"), quantize_e6(vec_col).alias("__qe")
-    ).persist()
-    try:
+    )
+    with pinned(q, eager=False) as q:
         seed = q.orderBy(F.col("id").asc()).limit(1).collect()
         if not seed:
             raise ValueError("kcenter_select: empty input")
         seed = seed[0]
         sel = [(1, int(seed["id"]), 0)]
         cur = q.withColumn("__md", _sq_dist_e12("__qe", list(seed["__qe"])))
-        for rank in range(2, k + 1):
-            far = cur.orderBy(
-                F.col("__md").desc(), F.col("id").asc()
-            ).limit(1).collect()
-            if not far:
-                break
-            far = far[0]
-            sel.append((rank, int(far["id"]), int(far["__md"])))
-            cur = cur.withColumn(
-                "__md",
-                F.least(F.col("__md"), _sq_dist_e12("__qe", list(far["__qe"]))),
-            )
-            if rank % 4 == 0:
-                cur = cur.localCheckpoint(eager=True)
+        held: list[DataFrame] = []  # the latest round's pin
+        try:
+            for rank in range(2, k + 1):
+                far = cur.orderBy(
+                    F.col("__md").desc(), F.col("id").asc()
+                ).limit(1).collect()
+                if not far:
+                    break
+                far = far[0]
+                sel.append((rank, int(far["id"]), int(far["__md"])))
+                cur = cur.withColumn(
+                    "__md",
+                    F.least(
+                        F.col("__md"), _sq_dist_e12("__qe", list(far["__qe"]))
+                    ),
+                )
+                if rank % 4 == 0:
+                    cur = pin(cur)
+                    release(*held)
+                    held = [cur]
+        finally:
+            release(*held)
         return spark.createDataFrame(
             sel, "rank bigint, vec_id bigint, dist_e12 bigint"
         )
-    finally:
-        q.unpersist()
 
 
 def kcenter_select_batch(
@@ -1004,7 +1001,7 @@ def kcenter_select_batch(
     and the threshold vanishes. Equivalence is pinned in tests at
     multiple k.
 
-    Per-pass cost: one TakeOrderedAndProject over the persisted
+    Per-pass cost: one TakeOrderedAndProject over the pinned
     quantized scan (ell bounded rows to the driver) + one md update
     against the accepted centers — JVM literal ``least`` chain while
     accepted*dim <= MAX_LITERAL_CELLS, else ONE Arrow pass (exact
@@ -1032,86 +1029,94 @@ def kcenter_select_batch(
         raise ValueError("kcenter_select_batch: ell must be >= 1")
     q = df.select(
         F.col(id_col).alias("id"), quantize_e6(vec_col).alias("__qe")
-    ).persist()
-    try:
-        seed = q.orderBy(F.col("id").asc()).limit(1).collect()
-        if not seed:
-            raise ValueError("kcenter_select_batch: empty input")
-        seed = seed[0]
-        sel = [(1, int(seed["id"]), 0)]
-        cur = q.withColumn("__md", _sq_dist_e12("__qe", list(seed["__qe"])))
-        dim = len(seed["__qe"])
-
-        def _md_update(frame: DataFrame, vecs: list[list[int]]) -> DataFrame:
-            if len(vecs) * dim <= MAX_LITERAL_CELLS:
-                return frame.withColumn(
-                    "__md",
-                    F.least(
-                        F.col("__md"),
-                        *[_sq_dist_e12("__qe", v) for v in vecs],
-                    ),
-                )
-            # one Arrow pass: exact — every intermediate is an integer
-            # under 2^53 (see _assign_arrow), so float64 matmul equals
-            # the int64 fold bit-for-bit. __qe round-trips through
-            # Arrow here (unlike _assign_arrow's slim output) because
-            # later passes still need the vectors.
-            import pandas as pd
-            from collections.abc import Iterator
-
-            C = np.array(vecs, dtype=np.float64)
-            c_sq = (C * C).sum(axis=1)
-            schema = frame.schema
-
-            def upd(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.vstack(pdf["__qe"].to_numpy()).astype(np.float64)
-                    d = (
-                        (X * X).sum(axis=1)[:, None]
-                        - 2.0 * (X @ C.T)
-                        + c_sq[None, :]
-                    ).min(axis=1)
-                    pdf["__md"] = np.minimum(
-                        pdf["__md"].to_numpy(), d.astype(np.int64)
-                    )
-                    yield pdf
-
-            return frame.mapInPandas(upd, schema)
-
-        passes = 0
-        while len(sel) < k:
-            passes += 1
-            batch = cur.orderBy(
-                F.col("__md").desc(), F.col("id").asc()
-            ).limit(ell).collect()
-            if not batch:
-                break
-            ids = np.array([int(r["id"]) for r in batch], dtype=np.int64)
-            vecs = np.array(
-                [list(r["__qe"]) for r in batch], dtype=np.int64
+    )
+    held: list[DataFrame] = []  # the latest pass's pin
+    with pinned(q, eager=False) as q:
+        try:
+            seed = q.orderBy(F.col("id").asc()).limit(1).collect()
+            if not seed:
+                raise ValueError("kcenter_select_batch: empty input")
+            seed = seed[0]
+            sel = [(1, int(seed["id"]), 0)]
+            cur = q.withColumn(
+                "__md", _sq_dist_e12("__qe", list(seed["__qe"]))
             )
-            md = np.array([int(r["__md"]) for r in batch], dtype=np.int64)
-            threshold = int(md[-1]) if len(batch) == ell else -1
-            accepted: list[list[int]] = []
-            first = True
+            dim = len(seed["__qe"])
+
+            def _md_update(
+                frame: DataFrame, vecs: list[list[int]]
+            ) -> DataFrame:
+                if len(vecs) * dim <= MAX_LITERAL_CELLS:
+                    return frame.withColumn(
+                        "__md",
+                        F.least(
+                            F.col("__md"),
+                            *[_sq_dist_e12("__qe", v) for v in vecs],
+                        ),
+                    )
+                # one Arrow pass: exact — every intermediate is an integer
+                # under 2^53 (see _assign_arrow), so float64 matmul equals
+                # the int64 fold bit-for-bit. __qe round-trips through
+                # Arrow here (unlike _assign_arrow's slim output) because
+                # later passes still need the vectors.
+                import pandas as pd
+                from collections.abc import Iterator
+
+                C = np.array(vecs, dtype=np.float64)
+                c_sq = (C * C).sum(axis=1)
+                schema = frame.schema
+
+                def upd(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                    for pdf in batches:
+                        if len(pdf) == 0:
+                            continue
+                        X = np.vstack(pdf["__qe"].to_numpy()).astype(np.float64)
+                        d = (
+                            (X * X).sum(axis=1)[:, None]
+                            - 2.0 * (X @ C.T)
+                            + c_sq[None, :]
+                        ).min(axis=1)
+                        pdf["__md"] = np.minimum(
+                            pdf["__md"].to_numpy(), d.astype(np.int64)
+                        )
+                        yield pdf
+
+                return frame.mapInPandas(upd, schema)
+
+            passes = 0
             while len(sel) < k:
-                i = int(np.lexsort((ids, -md))[0])
-                if not first and not md[i] > threshold:
+                passes += 1
+                batch = cur.orderBy(
+                    F.col("__md").desc(), F.col("id").asc()
+                ).limit(ell).collect()
+                if not batch:
                     break
-                first = False
-                sel.append((len(sel) + 1, int(ids[i]), int(md[i])))
-                accepted.append([int(v) for v in vecs[i]])
-                diff = vecs - vecs[i]
-                md = np.minimum(md, (diff * diff).sum(axis=1))
-            if len(sel) >= k:
-                break  # done — skip a useless distributed md update
-            cur = _md_update(cur, accepted).localCheckpoint(eager=True)
-        if stats is not None:
-            stats["passes"] = passes
-        return spark.createDataFrame(
-            sel, "rank bigint, vec_id bigint, dist_e12 bigint"
-        )
-    finally:
-        q.unpersist()
+                ids = np.array([int(r["id"]) for r in batch], dtype=np.int64)
+                vecs = np.array(
+                    [list(r["__qe"]) for r in batch], dtype=np.int64
+                )
+                md = np.array([int(r["__md"]) for r in batch], dtype=np.int64)
+                threshold = int(md[-1]) if len(batch) == ell else -1
+                accepted: list[list[int]] = []
+                first = True
+                while len(sel) < k:
+                    i = int(np.lexsort((ids, -md))[0])
+                    if not first and not md[i] > threshold:
+                        break
+                    first = False
+                    sel.append((len(sel) + 1, int(ids[i]), int(md[i])))
+                    accepted.append([int(v) for v in vecs[i]])
+                    diff = vecs - vecs[i]
+                    md = np.minimum(md, (diff * diff).sum(axis=1))
+                if len(sel) >= k:
+                    break  # done — skip a useless distributed md update
+                cur = pin(_md_update(cur, accepted))
+                release(*held)
+                held = [cur]
+            if stats is not None:
+                stats["passes"] = passes
+            return spark.createDataFrame(
+                sel, "rank bigint, vec_id bigint, dist_e12 bigint"
+            )
+        finally:
+            release(*held)

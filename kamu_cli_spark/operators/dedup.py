@@ -18,9 +18,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from kamu_cli_spark.operators.text import fingerprint, tokens
-from kamu_cli_spark.operators.util import spread as _spread
+from kamu_cli_spark.operators.util import (
+    pin,
+    pinned,
+    plan_bytes,
+    release,
+    spread as _spread,
+)
 
 
 def dedup_exact(
@@ -703,11 +710,10 @@ def ngram_jaccard_pairs(
     (id_a, id_b, jaccard) with jaccard rounded to 6 for cross-engine
     determinism.
     """
-    sh = (
-        explode_shingles_arrow(df, id_col, text_col, shingle_n, distinct=True)
-        .select(F.col(id_col).alias("id"), F.col("gram").alias("sh"))
-        .persist()  # read by both join sides and the size aggregation
-    )
+    # read by both join sides and the size aggregation
+    sh = pin(explode_shingles_arrow(
+        df, id_col, text_col, shingle_n, distinct=True
+    ).select(F.col(id_col).alias("id"), F.col("gram").alias("sh")), eager=False)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("id").alias("id_a"), "sh")
     b = sh.select(F.col("id").alias("id_b"), "sh")
@@ -756,90 +762,93 @@ def connected_components(
     the label OF the current label (path halving), which doubles the
     effective propagation distance — convergence in O(log diameter)
     rounds rather than O(diameter). Each round ends in
-    `localCheckpoint` so the logical plan stays O(1) deep instead of
-    growing per iteration (unbounded lineage both slows planning
-    quadratically and can overflow the analyzer stack). On a real
-    cluster swap localCheckpoint for a reliable `checkpoint` dir to
-    survive executor loss; the algorithm is unchanged.
+    a pin so the logical plan stays O(1) deep instead of growing per
+    iteration (unbounded lineage both slows planning quadratically and
+    can overflow the analyzer stack); each round releases the one
+    before it. The caller's `pairs` frame is never pinned or cached.
     """
-    n_pairs = pairs.persist().count()
-    if n_pairs <= driver_threshold:
-        import pandas as pd
+    with pinned(pairs.select(a_col, b_col), eager=False) as pairs:
+        n_pairs = pairs.count()
+        if n_pairs <= driver_threshold:
+            import pandas as pd
 
-        parent: dict = {}
+            parent: dict = {}
 
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
+            def find(x):
+                while parent[x] != x:
+                    parent[x] = parent[parent[x]]
+                    x = parent[x]
+                return x
 
-        # Arrow both directions: collect()'s Py4J row decode and the
-        # row-list createDataFrame were ~5x the cost of the union-find
-        # itself at 250k edges
-        pdf = pairs.select(a_col, b_col).toPandas()
-        for a, b in zip(pdf[a_col].tolist(), pdf[b_col].tolist()):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        keys = list(parent)
-        out = pd.DataFrame(
-            {"id": keys, "component": [find(x) for x in keys]}
-        )
-        spark = pairs.sparkSession
-        schema = pairs.select(
-            pairs[a_col].alias("id"), pairs[a_col].alias("component")
-        ).schema
-        pairs.unpersist()
-        return spark.createDataFrame(out, schema)
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = None
-    for _ in range(max_iterations):
-        # (a) neighbor labels: for every edge, propose dst's label to src
-        proposals = (
-            edges.join(labels, edges.dst == labels.id)
-            .select(F.col("src").alias("id"), "component")
-            .unionByName(labels)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        )
-        # (b) pointer jumping: adopt the label of my label. Component
-        # ids are themselves node ids present in `proposals`, so a
-        # self-join resolves one extra hop — doubling reach per round.
-        hop = proposals.select(
-            F.col("id").alias("p_id"), F.col("component").alias("p_comp")
-        )
-        labels = (
-            proposals.join(hop, proposals.component == hop.p_id, "left")
-            .select(
-                "id", F.least("component", "p_comp").alias("component")
+            # Arrow both directions: collect()'s Py4J row decode and
+            # the row-list createDataFrame were ~5x the cost of the
+            # union-find itself at 250k edges
+            pdf = pairs.toPandas()
+            for a, b in zip(pdf[a_col].tolist(), pdf[b_col].tolist()):
+                parent.setdefault(a, a)
+                parent.setdefault(b, b)
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
+            keys = list(parent)
+            out = pd.DataFrame(
+                {"id": keys, "component": [find(x) for x in keys]}
             )
-            .localCheckpoint(eager=True)
+            schema = pairs.select(
+                pairs[a_col].alias("id"), pairs[a_col].alias("component")
+            ).schema
+            return pairs.sparkSession.createDataFrame(out, schema)
+        edges = (
+            pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+            .unionByName(
+                pairs.select(
+                    F.col(b_col).alias("src"), F.col(a_col).alias("dst")
+                )
+            )
+            .distinct()
         )
-        # labels only ever decrease, so the label sum is a monotone
-        # convergence witness — one cheap aggregation instead of an
-        # anti-join diff per iteration
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    return labels.select(F.col("id"), F.col("component"))
+        with pinned(edges, eager=False) as edges:
+            labels = pin(
+                edges.select(F.col("src").alias("id"))
+                .distinct()
+                .withColumn("component", F.col("id"))
+            )
+            prev_sum = None
+            for _ in range(max_iterations):
+                # (a) neighbor labels: for every edge, propose dst's
+                # label to src
+                proposals = (
+                    edges.join(labels, edges.dst == labels.id)
+                    .select(F.col("src").alias("id"), "component")
+                    .unionByName(labels)
+                    .groupBy("id")
+                    .agg(F.min("component").alias("component"))
+                )
+                # (b) pointer jumping: adopt the label of my label.
+                # Component ids are themselves node ids present in
+                # `proposals`, so a self-join resolves one extra hop —
+                # doubling reach per round.
+                hop = proposals.select(
+                    F.col("id").alias("p_id"),
+                    F.col("component").alias("p_comp"),
+                )
+                nxt = pin(
+                    proposals.join(
+                        hop, proposals.component == hop.p_id, "left"
+                    ).select(
+                        "id", F.least("component", "p_comp").alias("component")
+                    )
+                )
+                release(labels)  # the previous round's pin
+                labels = nxt
+                # labels only ever decrease, so the label sum is a
+                # monotone convergence witness — one cheap aggregation
+                # instead of an anti-join diff per iteration
+                cur_sum = labels.agg(F.sum("component")).collect()[0][0]
+                if cur_sum == prev_sum:
+                    break
+                prev_sum = cur_sum
+            return labels.select(F.col("id"), F.col("component"))
 
 
 def winnow_fingerprints(
@@ -995,15 +1004,11 @@ def simhash_near_pairs(
         )
         for i in range(nbands)
     ]
-    banded = (
-        sim.select(
-            F.col(id_col).alias("id"),
-            F.col("simhash"),
-            F.explode(F.array(*bands)).alias("__b"),
-        )
-        .select("id", "simhash", "__b.band", "__b.bv")
-        .persist()  # self-joined below
-    )
+    banded = pin(sim.select(  # self-joined below
+        F.col(id_col).alias("id"),
+        F.col("simhash"),
+        F.explode(F.array(*bands)).alias("__b"),
+    ).select("id", "simhash", "__b.band", "__b.bv"), eager=False)
     a = banded.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "band", "bv")
     b = banded.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "band", "bv")
     return (
@@ -1218,20 +1223,31 @@ def duplicate_spans(
     makes."""
     if min_len < 2:
         raise ValueError("min_len must be >= 2")
-    from pyspark.sql import Window
-
     L = min_len
     occ = _span_occurrences_arrow(df, id_col, text_col, L)
-    if materialize_occurrences:
-        # DISK_ONLY, not the default MEMORY_AND_DISK(_DESER): the
-        # occurrence table is ~28 B/token SERIALIZED but several× that
-        # as unrolled JVM row objects — the deserialized store heap-OOMed
-        # the sf100 run outright. Sequential disk re-read of the compact
-        # serialized form beats a second Arrow shingling pass and keeps
-        # the heap for the shuffle.
-        from pyspark import StorageLevel
+    if not materialize_occurrences:
+        return _duplicate_spans(occ, id_col, L)
+    # DISK_ONLY, not the default MEMORY_AND_DISK(_DESER): the
+    # occurrence table is ~28 B/token SERIALIZED but several× that as
+    # unrolled JVM row objects — the deserialized store heap-OOMed the
+    # sf100 run outright. Sequential disk re-read of the compact
+    # serialized form beats a second Arrow shingling pass and keeps the
+    # heap for the shuffle.
+    with pinned(occ, StorageLevel.DISK_ONLY) as occ:
+        # Materialize the (small — duplicated spans only) result so the
+        # ~28 B/token occurrence pin is RELEASED here instead of
+        # accumulating disk blocks across repeated calls in one session
+        # (ADVICE r10). The count+probe were going to run exactly once
+        # on the caller's first action anyway; running them now costs
+        # one extra tiny checkpoint write and buys back the dominant
+        # scratch footprint, plus composers like strip_duplicate_spans
+        # reuse the span table without replay.
+        return pin(_duplicate_spans(occ, id_col, L), StorageLevel.DISK_ONLY)
 
-        occ = occ.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+
+def _duplicate_spans(occ: DataFrame, id_col: str, L: int) -> DataFrame:
+    """duplicate_spans' lazy plan over the (id, pos, __kh, __kl)
+    occurrence table."""
     dup_keys = (
         occ.groupBy("__kh", "__kl")
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -1247,25 +1263,11 @@ def duplicate_spans(
         F.when(F.col("pos") - F.lag("pos").over(w) > L, 1).otherwise(0),
     )
     isl = gapped.withColumn("__island", F.sum("__new").over(w))
-    spans = isl.groupBy(id_col, "__island").agg(
+    return isl.groupBy(id_col, "__island").agg(
         F.min("pos").alias("span_start"),
         (F.max("pos") + (L - 1)).alias("span_end"),
         (F.max("pos") + (L - 1) - F.min("pos") + 1).alias("span_tokens"),
     ).drop("__island")
-    if materialize_occurrences:
-        # Materialize the (small — duplicated spans only) result so the
-        # ~28 B/token occurrence checkpoint can be RELEASED here instead
-        # of accumulating disk blocks across repeated calls in one
-        # session (ADVICE r10). The count+probe were going to run
-        # exactly once on the caller's first action anyway; running
-        # them now costs one extra tiny checkpoint write and buys back
-        # the dominant scratch footprint, plus composers like
-        # strip_duplicate_spans reuse the span table without replay.
-        spans = spans.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
-        occ.unpersist()
-    return spans
 
 
 def strip_duplicate_spans(
@@ -1875,8 +1877,16 @@ def _merge_islands_py(pos_sorted, L):
     return spans
 
 
+#: Stats guard of the against-corpus collect: Catalyst's size estimate
+#: of the corpus must be at or under this for the key probe to run.
+SPAN_CORPUS_COLLECT_BYTES = 1 << 30
+#: Default key cap of that probe: 5M keys = 80 MB of driver arrays
+#: (the contaminated_spans artifact class).
+SPAN_CORPUS_COLLECT_KEYS = 5_000_000
+
+
 def _bounded_corpus_key_rows(
-    keys: DataFrame, corpus: DataFrame, collect_max_keys: int
+    keys: DataFrame, corpus: DataFrame, collect_max_keys: int | None
 ):
     """list[Row] | None — collect the static corpus's distinct window
     keys when that is affordable, enabling the against-corpus family's
@@ -1888,45 +1898,26 @@ def _bounded_corpus_key_rows(
     - zero-cost stats guard: Catalyst's logical size estimate of the
       corpus (file-index bytes for scans, tens of ms — the
       util.spread idiom) must be at or under
-      $KAMU_SPAN_CORPUS_COLLECT_BYTES (default 1 GiB). At real corpus
-      scale the probe job is never launched and the distributed
-      Bloom + semi-join path runs untouched.
-    - hard key cap: the probe collects at most `collect_max_keys` + 1
-      rows in ONE job; over the cap the probe is discarded and the
-      distributed path runs (one wasted bounded job, only reachable
-      under the stats guard).
+      SPAN_CORPUS_COLLECT_BYTES (1 GiB). At real corpus scale the
+      probe job is never launched and the distributed Bloom +
+      semi-join path runs untouched.
+    - hard key cap: the probe collects at most `collect_max_keys`
+      (None → SPAN_CORPUS_COLLECT_KEYS; 0 forces the distributed
+      path — how tests pin it) + 1 rows in ONE job; over the cap the
+      probe is discarded and the distributed path runs (one wasted
+      bounded job, only reachable under the stats guard).
     Unknown stats (no file index, e.g. an exotic source) → None."""
+    if collect_max_keys is None:
+        collect_max_keys = SPAN_CORPUS_COLLECT_KEYS
     if collect_max_keys <= 0 or corpus.isStreaming:
         return None
-    import os
-
-    try:
-        est = int(
-            corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return None
-    max_bytes = int(
-        os.environ.get("KAMU_SPAN_CORPUS_COLLECT_BYTES", str(1 << 30))
-    )
-    if est > max_bytes:
+    est = plan_bytes(corpus)
+    if est is None or est > SPAN_CORPUS_COLLECT_BYTES:
         return None
     rows = keys.limit(collect_max_keys + 1).collect()
     if len(rows) > collect_max_keys:
         return None
     return rows
-
-
-def _span_collect_cap(collect_max_keys: int | None) -> int:
-    """Resolve the against-corpus collect cap: explicit argument wins
-    (0 forces the distributed path — how tests pin it), else
-    $KAMU_SPAN_CORPUS_COLLECT_KEYS, default 5M keys = 80 MB of driver
-    arrays (the contaminated_spans artifact class)."""
-    if collect_max_keys is not None:
-        return collect_max_keys
-    import os
-
-    return int(os.environ.get("KAMU_SPAN_CORPUS_COLLECT_KEYS", "5000000"))
 
 
 def spans_against_corpus(
@@ -1975,9 +1966,7 @@ def spans_against_corpus(
     keys = corpus_window_keys(
         corpus, id_col, corpus_text_col or text_col, L
     )
-    rows = _bounded_corpus_key_rows(
-        keys, corpus, _span_collect_cap(collect_max_keys)
-    )
+    rows = _bounded_corpus_key_rows(keys, corpus, collect_max_keys)
     if rows is not None:
         return _span_audit_map(df, id_col, text_col, L, rows)
     hits = _confirmed_span_hits(
@@ -2087,9 +2076,7 @@ def strip_spans_against_corpus(
     keys = corpus_window_keys(
         corpus, id_col, corpus_text_col or text_col, L
     )
-    rows = _bounded_corpus_key_rows(
-        keys, corpus, _span_collect_cap(collect_max_keys)
-    )
+    rows = _bounded_corpus_key_rows(keys, corpus, collect_max_keys)
     if rows is not None:
         return _span_strip_map(df, id_col, text_col, L, rows)
     hits = _confirmed_span_hits(

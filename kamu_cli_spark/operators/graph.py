@@ -31,8 +31,13 @@ counterpart (kamu-cli has no graph operators).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
+
+from kamu_cli_spark.operators.util import pin, pinned, release
 
 E6 = 1_000_000
 BASE_E6 = 150_000  # (1 - 17/20) · 1e6
@@ -80,13 +85,16 @@ BROADCAST_UNROLL_MAX_RANK_ROWS = 8_000_000
 REAP_MIN_EDGES = 5_000_000
 
 
-def _prepare_graph(
+@contextmanager
+def _prepared_graph(
     edges: DataFrame, src: str, dst: str
-) -> tuple[DataFrame, DataFrame, int]:
-    """(ed, nodes, n_edges): ed = distinct edges with out-degree
-    attached, hash-partitioned by __s, materialized DISK_ONLY via
-    localCheckpoint. Design constraints learned on the sf100 run
-    (1.17B edges, single box):
+) -> Iterator[tuple[DataFrame, DataFrame, int]]:
+    """``with _prepared_graph(...) as (ed, nodes, n_edges)``: ed =
+    distinct edges with out-degree attached, hash-partitioned by __s,
+    pinned DISK_ONLY; nodes = the distinct node ids, pinned lazily
+    DISK_ONLY. Both pins are released on exit, so a caller's result
+    must be materialized inside the block. Design constraints learned
+    on the sf100 run (1.17B edges, single box):
 
     - ONE exchange builds ed: repartition by __s happens FIRST, and
       hashpartitioning(__s) satisfies the clustering the dedup
@@ -95,7 +103,7 @@ def _prepare_graph(
       naive distinct-then-join shape shuffled the full edge list three
       times, and shuffle files live for the WHOLE job: at sf100 that
       filled the disk before the heap mattered.
-    - localCheckpoint (not persist): it CUTS lineage, so the build
+    - a pin (localCheckpoint, not persist): it CUTS lineage, so the build
       shuffles become garbage the moment ed materializes and the
       cleaner can delete them mid-job; a persist keeps the lineage
       (and its shuffle files) pinned for recompute.
@@ -145,22 +153,21 @@ def _prepare_graph(
     # saved order can't be reused, this Spark build reports
     # UnknownPartitioning for checkpointed frames under AQE.)
     w = Window.partitionBy("__s")
-    ed = (
-        ed.withColumn("__deg", F.count(F.lit(1)).over(w))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    )
-    # the count doubles as the materialization barrier receipt and is a
-    # cached-block scan; callers reuse it for their regime decisions
-    n_edges = ed.count()
-    if n_edges > REAP_MIN_EDGES:
-        _reap_shuffles(ed.sparkSession)
-    nodes = (
-        ed.select(F.col("__s").alias("id"))
-        .unionByName(ed.select(F.col("__d").alias("id")))
-        .distinct()
-        .persist(StorageLevel.DISK_ONLY)
-    )
-    return ed, nodes, n_edges
+    ed = ed.withColumn("__deg", F.count(F.lit(1)).over(w))
+    with pinned(ed, StorageLevel.DISK_ONLY) as ed:
+        # the count doubles as the materialization barrier receipt and
+        # is a cached-block scan; callers reuse it for their regime
+        # decisions
+        n_edges = ed.count()
+        if n_edges > REAP_MIN_EDGES:
+            _reap_shuffles(ed.sparkSession)
+        nodes = (
+            ed.select(F.col("__s").alias("id"))
+            .unionByName(ed.select(F.col("__d").alias("id")))
+            .distinct()
+        )
+        with pinned(nodes, StorageLevel.DISK_ONLY, eager=False) as nodes:
+            yield ed, nodes, n_edges
 
 
 def _reap_shuffles(spark) -> None:
@@ -176,6 +183,63 @@ def _reap_shuffles(spark) -> None:
         pass  # cleanup is best-effort; correctness never depends on it
 
 
+def _rank_step(
+    ranks: DataFrame, ed: DataFrame, nodes: DataFrame, bcast_ranks: bool
+) -> DataFrame:
+    """One lazy PageRank iteration: (id, rank_e6) from the previous
+    round's ranks over the prepared edges."""
+    # Join strategy is COST-BASED on the node count:
+    # - small/medium graphs broadcast the rank frame (it is
+    #   nodes-sized by construction), so the edge list is never
+    #   exchanged or sorted per iteration — the iteration's only
+    #   shuffle is the map-side-combined contribution sum;
+    # - past BROADCAST_MAX_NODES, merge hint: both sides are
+    #   corpus-scale; the session's prefer-shuffled-hash would
+    #   build a per-task hash map over |E|/partitions rows
+    #   (~19M/task at sf100×32 slots — heap OOM at 8g). SMJ
+    #   spills. (ed does re-exchange each iteration there: this
+    #   Spark build reports UnknownPartitioning for
+    #   checkpointed/cached frames under AQE, so the saved
+    #   layout can't be reused — the callers' per-iteration reaping
+    #   keeps those shuffle files from accumulating.)
+    rk = F.broadcast(ranks) if bcast_ranks else ranks
+    contrib = (
+        rk.join(
+            ed if bcast_ranks else ed.hint("merge"),
+            rk["id"] == ed["__s"],
+        )
+        .select(
+            F.col("__d").alias("id"),
+            F.expr("div(rank_e6, __deg)").alias("__c"),
+        )
+        .groupBy("id")
+        .agg(F.sum("__c").alias("__inflow"))
+    )
+    # floor(17·x/20) with BOUNDED intermediates:
+    # x = 20q + r  =>  17q + floor(17r/20), r < 20 so the
+    # products never exceed x itself. The naive 17*x pre-scales
+    # by 17 and would wrap int64 (silently, in non-ANSI Spark;
+    # DuckDB raises) for hub inflows above ~5.4e17 e6-units —
+    # reachable only past ~5.4e11 nodes of total rank mass, but
+    # the bounded form costs nothing and keeps the bit-exact
+    # cross-engine claim unconditional (identical values to the
+    # oracle's 17*x//20 wherever the latter doesn't overflow).
+    return nodes.join(
+        F.broadcast(contrib) if bcast_ranks else contrib,
+        "id",
+        "left",
+    ).select(
+        "id",
+        (
+            F.lit(BASE_E6)
+            + F.expr(
+                "17 * div(coalesce(__inflow, 0L), 20)"
+                " + div(17 * pmod(coalesce(__inflow, 0L), 20), 20)"
+            )
+        ).cast("long").alias("rank_e6"),
+    )
+
+
 def pagerank_int(
     edges: DataFrame,
     src: str = "src",
@@ -189,101 +253,45 @@ def pagerank_int(
     engines — see the module docstring for the integer formulation."""
     if iterations < 0:
         raise ValueError("iterations must be non-negative")
-    ed, nodes, n_edges = _prepare_graph(edges, src, dst)
-    # Two iteration regimes, same result:
-    # - small graphs: lazy unrolled iterations + ONE final checkpoint --
-    #   per-iteration materialization (a job + a full System.gc each)
-    #   measured a 1.8x slowdown at sf1 for zero benefit;
-    # - big graphs: checkpoint EVERY iteration (16 B/row, DISK_ONLY)
-    #   and reap -- with the lazy shape all iterations' shuffle files
-    #   are alive simultaneously and DISK, not CPU, capped the feasible
-    #   graph size (the sf100 run died on scratch space before heap).
-    # ed is already materialized, so the count is a cached-block scan.
-    low_footprint = n_edges > LOW_FOOTPRINT_EDGES
-    # nodes is persisted and tiny per row; the count is one cheap job
-    # and decides the per-iteration join strategy for the whole run.
-    n_nodes = nodes.count()
-    bcast_ranks = n_nodes <= BROADCAST_MAX_NODES
-    # per-iteration checkpoint when EITHER bound trips: disk-bounded
-    # shuffle reaping for big graphs (LOW_FOOTPRINT_EDGES), or the
-    # broadcast-relation live-set bound for high iteration counts
-    # (BROADCAST_UNROLL_MAX_RANK_ROWS — ADVICE r14: unrolled broadcast
-    # iterations otherwise keep every iteration's rank broadcast alive
-    # at once during the final job).
-    checkpoint_each = low_footprint or (
-        bcast_ranks and n_nodes * iterations > BROADCAST_UNROLL_MAX_RANK_ROWS
-    )
-    try:
+    with _prepared_graph(edges, src, dst) as (ed, nodes, n_edges):
+        # Two iteration regimes, same result:
+        # - small graphs: lazy unrolled iterations + ONE final checkpoint --
+        #   per-iteration materialization (a job + a full System.gc each)
+        #   measured a 1.8x slowdown at sf1 for zero benefit;
+        # - big graphs: checkpoint EVERY iteration (16 B/row, DISK_ONLY)
+        #   and reap -- with the lazy shape all iterations' shuffle files
+        #   are alive simultaneously and DISK, not CPU, capped the feasible
+        #   graph size (the sf100 run died on scratch space before heap).
+        # ed is already materialized, so the count is a cached-block scan.
+        low_footprint = n_edges > LOW_FOOTPRINT_EDGES
+        # nodes is pinned and tiny per row; the count is one cheap job
+        # and decides the per-iteration join strategy for the whole run.
+        n_nodes = nodes.count()
+        bcast_ranks = n_nodes <= BROADCAST_MAX_NODES
+        # per-iteration checkpoint when EITHER bound trips: disk-bounded
+        # shuffle reaping for big graphs (LOW_FOOTPRINT_EDGES), or the
+        # broadcast-relation live-set bound for high iteration counts
+        # (BROADCAST_UNROLL_MAX_RANK_ROWS — ADVICE r14: unrolled broadcast
+        # iterations otherwise keep every iteration's rank broadcast alive
+        # at once during the final job).
+        checkpoint_each = low_footprint or (
+            bcast_ranks
+            and n_nodes * iterations > BROADCAST_UNROLL_MAX_RANK_ROWS
+        )
         ranks = nodes.withColumn("rank_e6", F.lit(E6).cast("long"))
         for _ in range(iterations):
-            # Join strategy is COST-BASED on the node count:
-            # - small/medium graphs broadcast the rank frame (it is
-            #   nodes-sized by construction), so the edge list is never
-            #   exchanged or sorted per iteration — the iteration's only
-            #   shuffle is the map-side-combined contribution sum;
-            # - past BROADCAST_MAX_NODES, merge hint: both sides are
-            #   corpus-scale; the session's prefer-shuffled-hash would
-            #   build a per-task hash map over |E|/partitions rows
-            #   (~19M/task at sf100×32 slots — heap OOM at 8g). SMJ
-            #   spills. (ed does re-exchange each iteration there: this
-            #   Spark build reports UnknownPartitioning for
-            #   checkpointed/cached frames under AQE, so the saved
-            #   layout can't be reused — the reaping below keeps those
-            #   per-iteration shuffle files from accumulating.)
-            rk = F.broadcast(ranks) if bcast_ranks else ranks
-            contrib = (
-                rk.join(
-                    ed if bcast_ranks else ed.hint("merge"),
-                    rk["id"] == ed["__s"],
-                )
-                .select(
-                    F.col("__d").alias("id"),
-                    F.expr("div(rank_e6, __deg)").alias("__c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("__c").alias("__inflow"))
-            )
-            # floor(17·x/20) with BOUNDED intermediates:
-            # x = 20q + r  =>  17q + floor(17r/20), r < 20 so the
-            # products never exceed x itself. The naive 17*x pre-scales
-            # by 17 and would wrap int64 (silently, in non-ANSI Spark;
-            # DuckDB raises) for hub inflows above ~5.4e17 e6-units —
-            # reachable only past ~5.4e11 nodes of total rank mass, but
-            # the bounded form costs nothing and keeps the bit-exact
-            # cross-engine claim unconditional (identical values to the
-            # oracle's 17*x//20 wherever the latter doesn't overflow).
-            ranks = nodes.join(
-                F.broadcast(contrib) if bcast_ranks else contrib,
-                "id",
-                "left",
-            ).select(
-                "id",
-                (
-                    F.lit(BASE_E6)
-                    + F.expr(
-                        "17 * div(coalesce(__inflow, 0L), 20)"
-                        " + div(17 * pmod(coalesce(__inflow, 0L), 20), 20)"
-                    )
-                ).cast("long").alias("rank_e6"),
-            )
+            nxt = _rank_step(ranks, ed, nodes, bcast_ranks)
             if checkpoint_each:
-                ranks = ranks.localCheckpoint(
-                    eager=True, storageLevel=StorageLevel.DISK_ONLY
-                )
+                nxt = pin(nxt, StorageLevel.DISK_ONLY)
+                release(ranks)  # the previous round's pin
                 if n_edges > REAP_MIN_EDGES:
-                    _reap_shuffles(ranks.sparkSession)
+                    _reap_shuffles(nxt.sparkSession)
+            ranks = nxt
         if not checkpoint_each or iterations == 0:
             # truncate the unrolled lineage / keep the returned frame
-            # valid past the unpersists below
-            ranks = ranks.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
-            )
+            # valid past the releases of ed and nodes
+            ranks = pin(ranks, StorageLevel.DISK_ONLY)
         return ranks
-    finally:
-        # both in the finally: an exception mid-iteration must not
-        # leave the DISK_ONLY nodes frame pinned (ADVICE r10)
-        nodes.unpersist()
-        ed.unpersist()
 
 
 def pagerank_int_converged(
@@ -314,42 +322,20 @@ def pagerank_int_converged(
         raise ValueError("epsilon_e6 must be non-negative")
     if max_iterations < 1:
         raise ValueError("max_iterations must be positive")
-    ed, nodes, n_edges = _prepare_graph(edges, src, dst)
-    try:
-        ranks = nodes.withColumn(
-            "rank_e6", F.lit(E6).cast("long")
-        ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    with _prepared_graph(edges, src, dst) as (ed, nodes, n_edges):
+        ranks = pin(
+            nodes.withColumn("rank_e6", F.lit(E6).cast("long")),
+            StorageLevel.DISK_ONLY,
+        )
         n_iters = 0
-        # same cost-based strategy switch as pagerank_int (see there)
+        # same cost-based strategy switch as pagerank_int (see
+        # _rank_step)
         bcast_ranks = nodes.count() <= BROADCAST_MAX_NODES
         for _ in range(max_iterations):
-            rk = F.broadcast(ranks) if bcast_ranks else ranks
-            contrib = (
-                rk.join(
-                    ed if bcast_ranks else ed.hint("merge"),
-                    rk["id"] == ed["__s"],
-                )
-                .select(
-                    F.col("__d").alias("id"),
-                    F.expr("div(rank_e6, __deg)").alias("__c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("__c").alias("__inflow"))
+            new_ranks = pin(
+                _rank_step(ranks, ed, nodes, bcast_ranks),
+                StorageLevel.DISK_ONLY,
             )
-            new_ranks = nodes.join(
-                F.broadcast(contrib) if bcast_ranks else contrib,
-                "id",
-                "left",
-            ).select(
-                "id",
-                (
-                    F.lit(BASE_E6)
-                    + F.expr(
-                        "17 * div(coalesce(__inflow, 0L), 20)"
-                        " + div(17 * pmod(coalesce(__inflow, 0L), 20), 20)"
-                    )
-                ).cast("long").alias("rank_e6"),
-            ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
             if n_edges > REAP_MIN_EDGES:
                 _reap_shuffles(new_ranks.sparkSession)
             n_iters += 1
@@ -363,10 +349,8 @@ def pagerank_int_converged(
                 )
                 .collect()[0]["__dmax"]
             )
+            release(ranks)  # the previous round's pin, read by the delta
             ranks = new_ranks
             if delta is not None and delta <= epsilon_e6:
                 break
         return ranks, n_iters
-    finally:
-        nodes.unpersist()
-        ed.unpersist()

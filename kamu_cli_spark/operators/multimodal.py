@@ -163,16 +163,3 @@ def decode_image(df: DataFrame, width: int, height: int) -> DataFrame:
 
     return df.mapInPandas(run, DECODED_SCHEMA)
 
-
-def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame sampling for video payloads — metadata-level selection:
-    keeps every Nth media row per (mime) group ordered by media_id.
-    Real frame extraction would decode inside mapInPandas as above."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("mime").orderBy("media_id")
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") - 1) % every_n == 0)
-        .drop("__rn")
-    )

@@ -24,6 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+from kamu_cli_spark.operators.util import pin
 
 # Width of the hex prefix used for bucketing: 4 hex chars = 65536
 # buckets, plenty of resolution for percent-level split fractions while
@@ -260,9 +263,9 @@ def mixture_rebalance(
     localCheckpoints it DISK_ONLY — ~60 B/doc serialized, the
     materialize_occurrences trade from dedup.duplicate_spans — so the
     corpus is scanned and tokenized ONCE instead of once per pass
-    (measured 11.2 s → 7 s at sf10). The checkpoint is released by the
-    ContextCleaner when the returned plan is dropped; pass False for a
-    pure-lazy plan (streaming composition, plan-shape tests).
+    (measured 11.2 s → 7 s at sf10). The pin is a result pin (see
+    util.pinned); pass False for a pure-lazy plan (streaming
+    composition, plan-shape tests).
     """
     if budget_num < 1 or budget_den < budget_num:
         raise ValueError("budget fraction must satisfy 0 < num/den <= 1")
@@ -288,11 +291,7 @@ def mixture_rebalance(
         .withColumn("__b", F.substring("__h", 1, _HEX_WIDTH))
     )
     if materialize:
-        from pyspark import StorageLevel
-
-        base = base.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
+        base = pin(base, StorageLevel.DISK_ONLY)
 
     # bounded histogram: per-(stratum, bucket) token sums
     hist = base.groupBy(strata_col, "__w", "__b").agg(

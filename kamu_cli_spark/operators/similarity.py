@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kamu_cli_spark.operators.util import cached_count, spread as _spread
+from kamu_cli_spark.operators.util import cached_count, pin, spread as _spread
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -256,12 +256,12 @@ def ivf_ann(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    c = _spread(corpus).select(
+    c = pin(_spread(corpus).select(
         F.col(corpus_id).alias("cid"),
         F.col(vec_col).alias("cv"),
         norm(F.col(vec_col)).alias("cn"),
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    ).persist()
+    ), eager=False)
     if n_centroids is None:
         n_corpus = cached_count(corpus)
         r = math.isqrt(max(n_corpus, 1))
@@ -1177,9 +1177,9 @@ def _with_buckets(
         F.col(vec_col).alias(v),
         _norm_buckets(F.col(vec_col)).alias("__s"),
     )
-    return dotted.select(
+    return pin(dotted.select(
         id_out, v, F.col("__s.n").alias(n), F.col("__s.b").alias("__b")
-    ).persist()
+    ), eager=False)
 
 
 def _explode_buckets(df: DataFrame, id_name: str) -> DataFrame:

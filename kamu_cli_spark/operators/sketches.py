@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kamu_cli_spark.operators.util import spread
+from kamu_cli_spark.operators.util import pin, spread
 
 _HASH_SPAN = 1 << 60  # md5 15-hex-prefix range
 
@@ -189,7 +189,7 @@ def kmv_pair_overlap(
     localCheckpoint, because this operator consumes it three times —
     a lazy corpus-backed lineage would otherwise rescan the corpus
     per consumer (plan-pinned in tests)."""
-    sketch = sketch.select(strata_col, "u").localCheckpoint(eager=True)
+    sketch = pin(sketch.select(strata_col, "u"))
     s = sketch.select(F.col(strata_col).alias("__s"), "u")
     strata = s.select(F.col("__s").alias("a")).distinct()
     pairs = F.broadcast(strata).crossJoin(
@@ -423,7 +423,7 @@ def cms_probe(
             "the sketch-join plumbing; rename them first"
         )
     if validate:
-        sketch = sketch.localCheckpoint(eager=True)
+        sketch = pin(sketch)
         geo = sketch.agg(
             F.max("row").alias("mr"), F.max("bucket").alias("mb")
         ).head()

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kamu_cli_spark.operators.util import pin
+
 # Tiny per-language stopword anchors for the n-gram/stopword heuristic
 # language ID. Deliberately small + deterministic — the point is the
 # *operator shape* (scales linearly, no shuffle); swap in fastText etc.
@@ -32,10 +34,6 @@ def tokens(text: Column) -> Column:
 
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
-
-
-def char_count(text: Column) -> Column:
-    return F.length(text)
 
 
 BPE_ISH_PATTERN = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]"
@@ -881,9 +879,9 @@ def lm_familiarity_buckets(
     # side-effect-free at call time — the checkpoint materializes with
     # the first action over the result, and both consumptions inside
     # that action share the one persisted execution just the same.
-    scored = ngram_lm_score(
+    scored = pin(ngram_lm_score(
         df, model, id_col=id_col, text_col=text_col, lowercase=lowercase
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     hist = scored.groupBy("familiarity_e6").agg(
         F.count(F.lit(1)).alias("__c")
     )
@@ -944,10 +942,10 @@ def dsir_select(
     # showed 51 s when reuse missed) — the pin makes one-pool-scan
     # structural, the same robustness the r14 DSIR fusion bought
     # elsewhere. One small (id, n_bigrams, weight) row per doc.
-    wdf = dsir_weights(
+    wdf = pin(dsir_weights(
         df, target_corpus, raw_corpus=raw_corpus,
         id_col=id_col, text_col=text_col, lowercase=lowercase,
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     hist = wdf.groupBy("dsir_weight_e6").agg(F.count(F.lit(1)).alias("__c"))
     total = hist.agg(F.sum("__c").alias("__n"))
     win = Window.orderBy(F.desc("dsir_weight_e6")).rowsBetween(
@@ -1036,10 +1034,9 @@ def source_lm_influence(
     # localCheckpoint makes one-scan STRUCTURAL (the r14 DSIR lesson:
     # never lean on AQE reuse for correctness of the cost model) while
     # keeping the API lazy; the pinned frame is a few KB per stratum.
-    sc = (
-        counts.groupBy("__sc", "w1", "w2")
-        .agg(F.sum("c").alias("c"))
-        .localCheckpoint(eager=False)
+    sc = pin(
+        counts.groupBy("__sc", "w1", "w2").agg(F.sum("c").alias("c")),
+        eager=False,
     )
     tot = sc.groupBy("w1", "w2").agg(F.sum("c").alias("ct"))
     ts = sc.groupBy("__sc", "w1").agg(F.sum("c").alias("ts"))

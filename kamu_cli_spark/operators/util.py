@@ -2,13 +2,86 @@
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 # Inputs at or above this size are assumed to already scan with >= core
 # count partitions (128 MB splits); blindly repartitioning them would be
 # a full shuffle of the operator's input — the opposite of what spread
 # is for.
 _SPREAD_MAX_BYTES = 512 * 1024 * 1024
+
+
+def plan_bytes(df: DataFrame) -> int | None:
+    """Catalyst's logical-plan size estimate of ``df`` in bytes
+    (file-index bytes for scans — tens of ms of driver work, no job),
+    or None when the plan carries no stats. Each caller picks its own
+    unknown-stats fallback."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+
+
+def pin(
+    df: DataFrame, level: StorageLevel | None = None, *, eager: bool = True
+) -> DataFrame:
+    """Materialize ``df`` once and cut its lineage: THE one
+    ``localCheckpoint`` in the package (see :func:`pinned` for the
+    lifetime rules and the executor-loss hazard). ``level`` None is
+    Spark's MEMORY_AND_DISK; ``eager=False`` defers the write to the
+    first action over the result, like ``persist`` — but without a
+    CacheManager entry, so nothing outlives the frame unless the
+    caller holds it."""
+    return df.localCheckpoint(eager=eager, storageLevel=level)
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free the blocks of frames returned by :func:`pin`. A checkpoint
+    is a ``LogicalRDD`` over a persisted RDD that Spark's CacheManager
+    never sees, so ``DataFrame.unpersist()`` is a no-op on it; this
+    unpersists the RDD itself. Any other frame (a projection of a pin,
+    an unpinned loop seed) is left alone. The caller must not read a
+    released frame again: its lineage is gone, so the read fails
+    instead of recomputing."""
+    for df in dfs:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
+@contextmanager
+def pinned(
+    df: DataFrame, level: StorageLevel | None = None, *, eager: bool = True
+) -> Iterator[DataFrame]:
+    """``with pinned(df) as p:`` — :func:`pin` for the block, then
+    :func:`release` on exit, exceptions included.
+
+    Lifetimes, one rule per shape:
+    - scoped: an intermediate read only inside one operator call uses
+      this manager;
+    - loops: each round pins its state, and the previous round's pin
+      is released once the new one is materialized;
+    - result pins: a pin the returned frame still reads is never
+      released here. It lives as long as the caller holds the frame;
+      the ContextCleaner frees its blocks once the frame is dropped.
+
+    Executor-loss hazard (stated once for every pin): localCheckpoint
+    blocks live only on the executor that computed them, and the
+    lineage that could recompute them is cut. Losing that executor
+    (crash, decommission, dynamic-allocation scale-down) while a pin
+    is still read fails the query instead of recomputing the lost
+    partitions. Local mode has one executor and never hits it; on a
+    real cluster, swap :func:`pin` for a reliable ``checkpoint`` over
+    a checkpoint directory — the operators are unchanged."""
+    p = pin(df, level, eager=eager)
+    try:
+        yield p
+    finally:
+        release(p)
 
 
 def broadcast_if_small(
@@ -35,12 +108,8 @@ def broadcast_if_small(
     Unknown stats → no hint (AQE's runtime threshold still applies)."""
     from pyspark.sql import functions as F
 
-    target = probe if probe is not None else df
-    try:
-        size = int(
-            target._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
+    size = plan_bytes(probe if probe is not None else df)
+    if size is None:
         return df
     return F.broadcast(df) if size <= max_bytes else df
 
@@ -62,9 +131,8 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
         # stats/repartition below would break streaming analysis
         return df
     target = target or df.sparkSession.sparkContext.defaultParallelism
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # stats unavailable → fall back to partition count
+    size = plan_bytes(df)
+    if size is None:  # stats unavailable → fall back to partition count
         if df.rdd.getNumPartitions() >= target:
             return df
         return df.repartition(target)
@@ -132,11 +200,8 @@ def widen_if_narrow(df: DataFrame, target: int) -> DataFrame:
     if df.isStreaming:
         return df
     spark = df.sparkSession
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
+    size = plan_bytes(df)
+    if size is None:
         if df.rdd.getNumPartitions() >= target:
             return df
         return df.repartition(target)

@@ -87,13 +87,8 @@ def get_spark(
         # map does not spill, so a badly misestimated build side (stats
         # stale after filters/UDFs) can OOM a task that SMJ would have
         # completed. Escape hatch without editing source:
-        #   SPARK_GRAFT_PREFER_SMJ=1  (or extra_conf) restores SMJ.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "true"
-            if os.environ.get("SPARK_GRAFT_PREFER_SMJ", "") not in ("", "0")
-            else "false",
-        )
+        #   extra_conf={"spark.sql.join.preferSortMergeJoin": "true"}.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # ODF identifiers are case-sensitive (reference:
         # engine_config_embedded.rs:18-30). Spark's default is
         # case-insensitive; we keep Spark's default for SQL-surface

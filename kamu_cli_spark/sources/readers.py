@@ -258,16 +258,6 @@ def prep_decompress(path: str, sub_path: str | None = None) -> str:
     raise ReaderError(f"unsupported archive: {path}")
 
 
-def prep_pipe(path: str, command: list[str]) -> str:
-    """PrepStepPipe: stream raw bytes through an external command."""
-    import subprocess
-
-    out = path + ".piped"
-    with open(path, "rb") as src, open(out, "wb") as dst:
-        subprocess.run(command, stdin=src, stdout=dst, check=True)
-    return out
-
-
 def apply_preprocess(spark, df, preprocess):
     """SetPollingSource's PREPROCESS stage (fetch → prep → read →
     **preprocess(SQL)** → merge; reference:

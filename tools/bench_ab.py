@@ -87,7 +87,6 @@ def main() -> None:
                         "action": round(t2 - t1, 3),
                         "jobs": job_high_water() - jobs_before,
                     }
-            spark.catalog.clearCache()
         return best, best_detail
 
     if confs:

@@ -42,7 +42,6 @@ def main() -> None:
         with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as fh:
             fh.write(txt)
         print(f"{name}: {len(txt)} chars", flush=True)
-        spark.catalog.clearCache()
     spark.stop()
 
 

